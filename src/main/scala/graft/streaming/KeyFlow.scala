@@ -220,18 +220,44 @@ object KeyFlow {
     * hosts /tmp is commonly a small (or RAM-backed) tmpfs while
     * `spark.local.dir` / `SPARK_LOCAL_DIRS` point at the large shuffle
     * disks, and a spill that lands on tmpfs consumes the very heap the
-    * spill exists to protect. Resolution mirrors Spark's own precedence
-    * (container env vars over conf over the JVM default); with several
-    * dirs the task's partition id picks one, spreading concurrent spills
-    * across spindles like the disk block manager does. */
-  private[streaming] def spillDirFor(partitionId: Int): java.nio.file.Path = {
-    val configured = sys.env.get("SPARK_LOCAL_DIRS")
-      .orElse(sys.env.get("LOCAL_DIRS")) // YARN container form
-      .orElse(Option(org.apache.spark.SparkEnv.get)
-        .flatMap(e => e.conf.getOption("spark.local.dir")))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty))
-      .filter(_.nonEmpty)
-      .getOrElse(Array(System.getProperty("java.io.tmpdir")))
+    * spill exists to protect. Reads this process's environment, the live
+    * `SparkEnv` conf and the JVM property, and resolves them through
+    * [[resolveSpillDir]]. */
+  private[streaming] def spillDirFor(partitionId: Int): java.nio.file.Path =
+    resolveSpillDir(sys.env,
+      Option(org.apache.spark.SparkEnv.get)
+        .flatMap(_.conf.getOption("spark.local.dir")),
+      System.getProperty("java.io.tmpdir"), partitionId)
+
+  /** [[spillDirFor]] as a function of its arguments alone. The first
+    * source that names a non-blank dir wins, in the order of Spark's own
+    * `Utils.getConfiguredLocalDirs`:
+    *  1. `LOCAL_DIRS` (comma list), only when `CONTAINER_ID` is set — a
+    *     YARN container;
+    *  1. `SPARK_EXECUTOR_DIRS` (`File.pathSeparator` list) — set by the
+    *     standalone worker for every executor it launches;
+    *  1. `SPARK_LOCAL_DIRS` (comma list);
+    *  1. `localDir`, the `spark.local.dir` conf (comma list);
+    *  1. `tmpDir`, the JVM's `java.io.tmpdir`.
+    *
+    * Unlike Spark, blank entries are dropped and a source with no
+    * non-blank entry falls through to the next, rather than yielding the
+    * empty path (or, for YARN, throwing). With several dirs the partition
+    * id picks one (`floorMod`, so -1 is safe), spreading concurrent
+    * spills across spindles like the disk block manager does. The chosen
+    * dir is created if missing. */
+  private[streaming] def resolveSpillDir(
+      env: Map[String, String], localDir: Option[String], tmpDir: String,
+      partitionId: Int): java.nio.file.Path = {
+    def dirs(value: Option[String], sep: String): Option[Array[String]] =
+      value.map(_.split(sep).map(_.trim).filter(_.nonEmpty))
+        .filter(_.nonEmpty)
+    val configured = env.get("CONTAINER_ID")
+      .flatMap(_ => dirs(env.get("LOCAL_DIRS"), ","))
+      .orElse(dirs(env.get("SPARK_EXECUTOR_DIRS"), java.io.File.pathSeparator))
+      .orElse(dirs(env.get("SPARK_LOCAL_DIRS"), ","))
+      .orElse(dirs(localDir, ","))
+      .getOrElse(Array(tmpDir))
     val dir = java.nio.file.Paths.get(
       configured(math.floorMod(partitionId, configured.length)))
     java.nio.file.Files.createDirectories(dir)

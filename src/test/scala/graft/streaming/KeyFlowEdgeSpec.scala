@@ -223,42 +223,75 @@ class KeyFlowEdgeSpec extends SparkTestBase {
 
   test("spillDirFor honors spark.local.dir over the JVM tmpdir and " +
     "spreads by partition id") {
-    // Flake hardening (r16; the one red gate in the driver's r15 run was
-    // this suite): the test mutates the SHARED SparkEnv conf, so any
-    // straggler task from an earlier suite that spills while the conf
-    // points at our temp dirs would leave a file behind — and the old
-    // deleteIfExists cleanup then threw DirectoryNotEmptyException and
-    // failed THIS test for someone else's spill. Clear any leaked
-    // spark.local.dir up front (restored after), and clean up
-    // recursively + tolerantly.
-    val conf = org.apache.spark.SparkEnv.get.conf
-    val preexisting = conf.getOption("spark.local.dir")
-    preexisting.foreach(_ => conf.remove("spark.local.dir"))
-    // the session now has no spark.local.dir -> JVM default
-    val default = KeyFlow.spillDirFor(0)
-    assert(default.toString.startsWith(
-      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")).toString))
-    // with spark.local.dir set on the active SparkEnv conf, spills go
-    // there (comma list, picked by partition id, created if missing)
+    // through the resolver with an explicit empty env, so the result does
+    // not depend on (and the test never writes) the process env or the
+    // shared SparkEnv conf
+    val tmp = System.getProperty("java.io.tmpdir")
+    assert(KeyFlow.resolveSpillDir(Map.empty, None, tmp, 0) ==
+      java.nio.file.Paths.get(tmp))
+    // a comma list in spark.local.dir is picked by partition id, and a
+    // dir that does not exist yet is created
     val d1 = java.nio.file.Files.createTempDirectory("graft-ld1")
     val d2 = d1.resolveSibling(d1.getFileName.toString + "-b") // not yet created
-    conf.set("spark.local.dir", s"$d1,$d2")
+    def pick(pid: Int) = KeyFlow.resolveSpillDir(Map.empty, Some(s"$d1,$d2"), tmp, pid)
     try {
-      assert(KeyFlow.spillDirFor(0) == d1)
-      assert(KeyFlow.spillDirFor(1) == d2 && java.nio.file.Files.isDirectory(d2))
-      assert(KeyFlow.spillDirFor(2) == d1)
-      assert(KeyFlow.spillDirFor(-1) == d2) // floorMod, never negative index
+      assert(pick(0) == d1)
+      assert(pick(1) == d2 && java.nio.file.Files.isDirectory(d2))
+      assert(pick(2) == d1)
+      assert(pick(-1) == d2) // floorMod, never negative index
     } finally {
-      preexisting match {
-        case Some(v) => conf.set("spark.local.dir", v)
-        case None    => conf.remove("spark.local.dir")
-      }
-      // recursive + tolerant: a stray spill from a concurrent straggler
-      // must not fail the suite (it is not our leak)
-      try { scala.reflect.io.Path(d2.toFile).deleteRecursively(); () }
-      catch { case _: Throwable => () }
-      try { scala.reflect.io.Path(d1.toFile).deleteRecursively(); () }
-      catch { case _: Throwable => () }
+      java.nio.file.Files.deleteIfExists(d2)
+      java.nio.file.Files.deleteIfExists(d1)
     }
+  }
+
+  test("resolveSpillDir follows Spark's local-dir precedence, dropping " +
+    "blank entries") {
+    val base = java.nio.file.Files.createTempDirectory("graft-prec")
+    val Seq(yarn, exec1, exec2, envDir, confDir, tmp) =
+      Seq("yarn", "exec1", "exec2", "env", "conf", "tmp").map(base.resolve)
+    val sep = java.io.File.pathSeparator
+    val all = Map("CONTAINER_ID" -> "c_1", "LOCAL_DIRS" -> s"$yarn",
+      "SPARK_EXECUTOR_DIRS" -> s"$exec1$sep$exec2",
+      "SPARK_LOCAL_DIRS" -> s"$envDir")
+    def resolve(env: Map[String, String], conf: Option[String] = Some(s"$confDir"),
+                pid: Int = 0) = KeyFlow.resolveSpillDir(env, conf, s"$tmp", pid)
+    try {
+      // 1. YARN container dirs win over everything
+      assert(resolve(all) == yarn)
+      // ... but only inside a container: LOCAL_DIRS alone is not YARN's
+      assert(resolve(all - "CONTAINER_ID") == exec1)
+      // 2. the standalone worker's executor dirs, split on pathSeparator
+      assert(resolve(all - "CONTAINER_ID", pid = 1) == exec2)
+      // 3. env over conf
+      assert(resolve(Map("SPARK_LOCAL_DIRS" -> s"$envDir")) == envDir)
+      // 4. conf over tmpdir
+      assert(resolve(Map.empty) == confDir)
+      // 5. the JVM default when nothing is configured
+      assert(resolve(Map.empty, conf = None) == tmp)
+      // blank and whitespace entries are dropped, not picked as ""
+      assert(Seq(0, 1, 2).map(p => resolve(
+        Map("SPARK_LOCAL_DIRS" -> s" , $envDir ,,"), pid = p)).toSet == Set(envDir))
+      // an all-blank source falls through to the next one
+      assert(resolve(all ++ Map("LOCAL_DIRS" -> " , ",
+        "SPARK_EXECUTOR_DIRS" -> s" $sep ")) == envDir)
+      assert(resolve(Map("SPARK_LOCAL_DIRS" -> " ,")) == confDir)
+      assert(resolve(Map.empty, conf = Some(" , ")) == tmp)
+      assert(resolve(Map("CONTAINER_ID" -> "c_1")) == confDir)
+    } finally {
+      Seq(yarn, exec1, exec2, envDir, confDir, tmp, base)
+        .foreach(java.nio.file.Files.deleteIfExists)
+    }
+  }
+
+  test("spillDirFor resolves from the process env, the live SparkEnv conf " +
+    "and java.io.tmpdir") {
+    // holds whether or not SPARK_LOCAL_DIRS (or any other source) is set
+    spark.sparkContext // the shared session's context makes SparkEnv live
+    val liveConf = org.apache.spark.SparkEnv.get.conf.getOption("spark.local.dir")
+    val tmp = System.getProperty("java.io.tmpdir")
+    for (pid <- Seq(0, 1, 7, -1))
+      assert(KeyFlow.spillDirFor(pid) ==
+        KeyFlow.resolveSpillDir(sys.env, liveConf, tmp, pid))
   }
 }
