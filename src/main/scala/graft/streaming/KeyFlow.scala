@@ -225,39 +225,34 @@ object KeyFlow {
     * [[resolveSpillDir]]. */
   private[streaming] def spillDirFor(partitionId: Int): java.nio.file.Path =
     resolveSpillDir(sys.env,
-      Option(org.apache.spark.SparkEnv.get)
-        .flatMap(_.conf.getOption("spark.local.dir")),
+      Option(org.apache.spark.SparkEnv.get).map(_.conf)
+        .getOrElse(new org.apache.spark.SparkConf(false)),
       System.getProperty("java.io.tmpdir"), partitionId)
 
-  /** [[spillDirFor]] as a function of its arguments alone. The first
-    * source that names a non-blank dir wins, in the order of Spark's own
-    * `Utils.getConfiguredLocalDirs`:
+  /** [[spillDirFor]] as a function of its arguments alone. The dirs are
+    * the ones Spark's own `Utils.getConfiguredLocalDirs` picks (through
+    * [[org.apache.spark.graft.LocalDirs]]), from the first source that is
+    * set:
     *  1. `LOCAL_DIRS` (comma list), only when `CONTAINER_ID` is set — a
-    *     YARN container;
+    *     YARN container; Spark shuffles their order, and refuses a
+    *     container without them;
     *  1. `SPARK_EXECUTOR_DIRS` (`File.pathSeparator` list) — set by the
     *     standalone worker for every executor it launches;
     *  1. `SPARK_LOCAL_DIRS` (comma list);
-    *  1. `localDir`, the `spark.local.dir` conf (comma list);
+    *  1. `spark.local.dir` in `conf` (comma list);
     *  1. `tmpDir`, the JVM's `java.io.tmpdir`.
     *
-    * Unlike Spark, blank entries are dropped and a source with no
-    * non-blank entry falls through to the next, rather than yielding the
-    * empty path (or, for YARN, throwing). With several dirs the partition
-    * id picks one (`floorMod`, so -1 is safe), spreading concurrent
-    * spills across spindles like the disk block manager does. The chosen
-    * dir is created if missing. */
+    * Blank entries are dropped; if the source Spark picks names no
+    * non-blank dir, the spill goes to `tmpDir` rather than to the empty
+    * path. With several dirs the partition id picks one (`floorMod`, so -1
+    * is safe), spreading concurrent spills across spindles like the disk
+    * block manager does. The chosen dir is created if missing. */
   private[streaming] def resolveSpillDir(
-      env: Map[String, String], localDir: Option[String], tmpDir: String,
-      partitionId: Int): java.nio.file.Path = {
-    def dirs(value: Option[String], sep: String): Option[Array[String]] =
-      value.map(_.split(sep).map(_.trim).filter(_.nonEmpty))
-        .filter(_.nonEmpty)
-    val configured = env.get("CONTAINER_ID")
-      .flatMap(_ => dirs(env.get("LOCAL_DIRS"), ","))
-      .orElse(dirs(env.get("SPARK_EXECUTOR_DIRS"), java.io.File.pathSeparator))
-      .orElse(dirs(env.get("SPARK_LOCAL_DIRS"), ","))
-      .orElse(dirs(localDir, ","))
-      .getOrElse(Array(tmpDir))
+      env: Map[String, String], conf: org.apache.spark.SparkConf,
+      tmpDir: String, partitionId: Int): java.nio.file.Path = {
+    val named = org.apache.spark.graft.LocalDirs.configured(conf, env, tmpDir)
+      .map(_.trim).filter(_.nonEmpty)
+    val configured = if (named.nonEmpty) named else Array(tmpDir)
     val dir = java.nio.file.Paths.get(
       configured(math.floorMod(partitionId, configured.length)))
     java.nio.file.Files.createDirectories(dir)

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkTestBase
 import graft.fold.FoldOption
 import graft.model.Record
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import java.nio.file.Files
@@ -223,17 +224,18 @@ class KeyFlowEdgeSpec extends SparkTestBase {
 
   test("spillDirFor honors spark.local.dir over the JVM tmpdir and " +
     "spreads by partition id") {
-    // through the resolver with an explicit empty env, so the result does
-    // not depend on (and the test never writes) the process env or the
-    // shared SparkEnv conf
+    // through the resolver with an explicit empty env and a fresh conf, so
+    // the result does not depend on (and the test never writes) the
+    // process env or the shared SparkEnv conf
     val tmp = System.getProperty("java.io.tmpdir")
-    assert(KeyFlow.resolveSpillDir(Map.empty, None, tmp, 0) ==
+    assert(KeyFlow.resolveSpillDir(Map.empty, new SparkConf(false), tmp, 0) ==
       java.nio.file.Paths.get(tmp))
     // a comma list in spark.local.dir is picked by partition id, and a
     // dir that does not exist yet is created
     val d1 = java.nio.file.Files.createTempDirectory("graft-ld1")
     val d2 = d1.resolveSibling(d1.getFileName.toString + "-b") // not yet created
-    def pick(pid: Int) = KeyFlow.resolveSpillDir(Map.empty, Some(s"$d1,$d2"), tmp, pid)
+    val conf = new SparkConf(false).set("spark.local.dir", s"$d1,$d2")
+    def pick(pid: Int) = KeyFlow.resolveSpillDir(Map.empty, conf, tmp, pid)
     try {
       assert(pick(0) == d1)
       assert(pick(1) == d2 && java.nio.file.Files.isDirectory(d2))
@@ -254,13 +256,19 @@ class KeyFlowEdgeSpec extends SparkTestBase {
     val all = Map("CONTAINER_ID" -> "c_1", "LOCAL_DIRS" -> s"$yarn",
       "SPARK_EXECUTOR_DIRS" -> s"$exec1$sep$exec2",
       "SPARK_LOCAL_DIRS" -> s"$envDir")
-    def resolve(env: Map[String, String], conf: Option[String] = Some(s"$confDir"),
-                pid: Int = 0) = KeyFlow.resolveSpillDir(env, conf, s"$tmp", pid)
+    def resolve(env: Map[String, String], localDir: Option[String] = Some(s"$confDir"),
+                pid: Int = 0) = {
+      val conf = new SparkConf(false)
+      localDir.foreach(conf.set("spark.local.dir", _))
+      KeyFlow.resolveSpillDir(env, conf, s"$tmp", pid)
+    }
     try {
       // 1. YARN container dirs win over everything
       assert(resolve(all) == yarn)
       // ... but only inside a container: LOCAL_DIRS alone is not YARN's
       assert(resolve(all - "CONTAINER_ID") == exec1)
+      // ... and a container without them is refused, as Spark refuses it
+      intercept[Exception](resolve(Map("CONTAINER_ID" -> "c_1")))
       // 2. the standalone worker's executor dirs, split on pathSeparator
       assert(resolve(all - "CONTAINER_ID", pid = 1) == exec2)
       // 3. env over conf
@@ -268,16 +276,16 @@ class KeyFlowEdgeSpec extends SparkTestBase {
       // 4. conf over tmpdir
       assert(resolve(Map.empty) == confDir)
       // 5. the JVM default when nothing is configured
-      assert(resolve(Map.empty, conf = None) == tmp)
+      assert(resolve(Map.empty, localDir = None) == tmp)
       // blank and whitespace entries are dropped, not picked as ""
       assert(Seq(0, 1, 2).map(p => resolve(
         Map("SPARK_LOCAL_DIRS" -> s" , $envDir ,,"), pid = p)).toSet == Set(envDir))
-      // an all-blank source falls through to the next one
-      assert(resolve(all ++ Map("LOCAL_DIRS" -> " , ",
-        "SPARK_EXECUTOR_DIRS" -> s" $sep ")) == envDir)
-      assert(resolve(Map("SPARK_LOCAL_DIRS" -> " ,")) == confDir)
-      assert(resolve(Map.empty, conf = Some(" , ")) == tmp)
-      assert(resolve(Map("CONTAINER_ID" -> "c_1")) == confDir)
+      // the first source that is set decides, as in Spark; if it names no
+      // non-blank dir the spill goes to tmpdir, not to a later source
+      assert(resolve(all ++ Map("LOCAL_DIRS" -> " , ")) == tmp)
+      assert(resolve(Map("SPARK_EXECUTOR_DIRS" -> s" $sep ")) == tmp)
+      assert(resolve(Map("SPARK_LOCAL_DIRS" -> " ,")) == tmp)
+      assert(resolve(Map.empty, localDir = Some(" , ")) == tmp)
     } finally {
       Seq(yarn, exec1, exec2, envDir, confDir, tmp, base)
         .foreach(java.nio.file.Files.deleteIfExists)
@@ -288,7 +296,7 @@ class KeyFlowEdgeSpec extends SparkTestBase {
     "and java.io.tmpdir") {
     // holds whether or not SPARK_LOCAL_DIRS (or any other source) is set
     spark.sparkContext // the shared session's context makes SparkEnv live
-    val liveConf = org.apache.spark.SparkEnv.get.conf.getOption("spark.local.dir")
+    val liveConf = org.apache.spark.SparkEnv.get.conf
     val tmp = System.getProperty("java.io.tmpdir")
     for (pid <- Seq(0, 1, 7, -1))
       assert(KeyFlow.spillDirFor(pid) ==
