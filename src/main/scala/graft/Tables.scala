@@ -1,17 +1,85 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
   * Every query receives `(spark, sfDir)` and reads through here, so filters
   * and projections declared downstream reach the parquet scan (predicate
   * pushdown / column pruning) — at 100 TB the scan is the dominant cost.
+  *
+  * SCHEMA MEMO: a parquet read without a schema runs a Spark job that opens
+  * a footer to infer one (`ParquetUtils.inferSchema`), even with
+  * `mergeSchema=false` — about 60 ms of scheduling and job time per table read
+  * on a 4-core host, paid by every query. [[parquet]] infers each table's schema once per JVM
+  * and hands it to every later read as a user-supplied schema, so inference
+  * never runs again. The memo holds one schema per (qualified path, values
+  * of [[SchemaConfs]]), stamped with the [[fingerprint]] of the files it
+  * was inferred from. A read whose fingerprint differs — the table was
+  * rewritten, appended to or replaced — re-infers and replaces the entry;
+  * so does a read under different schema-conversion confs. Each call still
+  * returns a fresh `spark.read.schema(s).parquet(path)`: new attribute ids
+  * (self-joins resolve), Spark's own file listing per read, and the same
+  * scan as an inferring read, since inference yields that same schema.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** Session confs that change the schema Spark infers from the same
+    * parquet files: the footer-to-Catalyst type conversion
+    * (`ParquetToSparkSchemaConverter`), which footers are merged, and
+    * partition-column typing. */
+  private val SchemaConfs: Seq[String] = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+  /** (qualified path, schema conf values) -> (fingerprint, schema). */
+  private val schemas =
+    new ConcurrentHashMap[(String, Seq[Option[String]]), (String, StructType)]()
+
+  /** The file METADATA under `path` (a file or a directory tree): each
+    * leaf's `path:length:mtime`, sorted; no data is read. A rewrite,
+    * append or delete changes it. One recursive listing, no Spark job. */
+  def fingerprint(fs: FileSystem, path: Path): String = {
+    val leaves = fs.listFiles(path, true)
+    val out = Seq.newBuilder[String]
+    while (leaves.hasNext) {
+      val f = leaves.next()
+      out += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
+    }
+    out.result().sorted.mkString("|")
+  }
+
+  /** `spark.read.parquet(path)` with the schema taken from the memo (see
+    * SCHEMA MEMO above); only a miss runs the inference job. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = (fs.makeQualified(p).toString, SchemaConfs.map(spark.conf.getOption))
+    val stamp = fingerprint(fs, p)
+    val schema = Option(schemas.get(key)) match {
+      case Some((`stamp`, s)) => s
+      case _ =>
+        val s = spark.read.parquet(path).schema
+        schemas.put(key, (stamp, s))
+        s
+    }
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** How many independently-readable units a DataFrame's input offers —
     * the guard every fan-out seam shares. For a parquet-scan-backed plan
@@ -91,7 +159,7 @@ object Tables {
       // the queries and their oracles never track the physical type.
       // timestampdiff is timezone-free on NTZ (no session-tz dependence).
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$sfDir/$name.parquet")
+      val df = parquet(spark, s"$sfDir/$name.parquet")
       df.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType => df
         case org.apache.spark.sql.types.TimestampNTZType =>
@@ -104,6 +172,6 @@ object Tables {
         case other =>
           throw new IllegalStateException(s"events.ts unsupported type: $other")
       }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+    } else parquet(spark, s"$sfDir/$name.parquet")
   }
 }

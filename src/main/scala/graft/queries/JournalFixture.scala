@@ -18,10 +18,11 @@ import org.apache.spark.sql.functions._
   * bench time the codegen'd `from_json` decode only — and makes the
   * correctness gate read the exact same bytes the bench reads.
   *
-  * The fixture key fingerprints the events table's file METADATA (name,
-  * length, modification time — no data read), so a regenerated sf dir
-  * re-encodes instead of serving a stale fixture; a missing `_SUCCESS`
-  * marker (crashed writer) also re-encodes.
+  * The fixture key is the events table's [[Tables.fingerprint]] (file
+  * metadata, no data read), so a regenerated sf dir re-encodes instead of
+  * serving a stale fixture; a missing `_SUCCESS` marker (crashed writer)
+  * also re-encodes. The fixture is read through [[Tables.parquet]], whose
+  * schema memo keys on the same fingerprint.
   */
 object JournalFixture {
 
@@ -32,17 +33,13 @@ object JournalFixture {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(path, "_SUCCESS")))
       encode(spark, dir).write.mode("overwrite").parquet(path.toString)
-    spark.read.parquet(path.toString)
+    Tables.parquet(spark, path.toString)
   }
 
   private def fixturePath(spark: SparkSession, dir: String): String = {
     val events = new Path(dir, "events.parquet")
     val fs = events.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stat = fs.getFileStatus(events)
-    val stamp =
-      (if (stat.isDirectory) fs.listStatus(events).toSeq else Seq(stat))
-        .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
-        .sorted.mkString("|")
+    val stamp = Tables.fingerprint(fs, events)
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(s"$dir|$stamp".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(16)

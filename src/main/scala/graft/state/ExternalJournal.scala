@@ -42,8 +42,10 @@ object ExternalJournal {
     // (KeyFlowTws.flow filters them): a journal with null-key appends
     // must rebuild the SAME keyed state set batch-wise that the
     // streaming path produces — stream-vs-batch parity would otherwise
-    // differ by a spurious (null, state) row
-    val records = spark.read.parquet(journalDir)
+    // differ by a spurious (null, state) row. The declared Record schema
+    // (as in `stream`) spares an inference job and keeps `topic`, the
+    // partition dir column, a string
+    val records = spark.read.schema(recEnc.schema).parquet(journalDir)
       .filter(col("topic") === topic && col("key").isNotNull)
       .select("topic", "partition", "offset", "timestamp", "timestampType",
         "key", "value", "headers")

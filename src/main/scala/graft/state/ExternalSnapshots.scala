@@ -1,7 +1,7 @@
 package graft.state
 
 import graft.model.KafkaKey
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.concurrent.duration.FiniteDuration
@@ -31,6 +31,12 @@ import scala.concurrent.duration.FiniteDuration
   * a directory written by a pre-framing `upsert` (raw value bytes) fails
   * loudly with a migration message instead of having its first value
   * byte silently stripped by the frame decoder.
+  *
+  * Reads use the declared [[SnapshotRow]] schema, never an inferred one, as
+  * the reference's snapshot table has a declared schema: no inference job
+  * per read, a stamped store with no data files reads as empty, and ids
+  * are compared as strings — the partition values `group_id=007` and
+  * `group_id=7` are two groups, not one int 7.
   */
 object ExternalSnapshots {
 
@@ -97,6 +103,8 @@ object ExternalSnapshots {
       value: Array[Byte],
       written_at_ms: Long)
 
+  private lazy val RowSchema = Encoders.product[SnapshotRow].schema
+
   /** LZ4 threshold matching the reference's external-state compressor
     * (persistence/compression/Compressor.scala:27-96): values at or above
     * it are LZ4-block-compressed, smaller ones pass through — either way
@@ -139,7 +147,7 @@ object ExternalSnapshots {
                  expiration: Option[FiniteDuration] = None,
                  nowMs: Long = System.currentTimeMillis()): DataFrame = {
     requireFramedStore(spark, storeDir)
-    val latest = spark.read.parquet(storeDir)
+    val latest = spark.read.schema(RowSchema).parquet(storeDir)
       .filter(col("application_id") === applicationId && col("group_id") === groupId)
       .groupBy("topic", "partition", "key")
       .agg(
@@ -168,7 +176,7 @@ object ExternalSnapshots {
               expiration: Option[FiniteDuration] = None,
               nowMs: Long = System.currentTimeMillis()): Unit = {
     requireFramedStore(spark, storeDir)
-    val latest = spark.read.parquet(storeDir)
+    val latest = spark.read.schema(RowSchema).parquet(storeDir)
       .groupBy("application_id", "group_id", "topic", "partition", "key")
       .agg(
         max("offset").as("offset"),

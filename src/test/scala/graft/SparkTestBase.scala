@@ -54,7 +54,19 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     sb.toString
   }
 
-  override def afterAll(): Unit = super.afterAll()
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh temp dir that is deleted, with everything in it, after the
+    * suite's last test. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(d.toFile)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteDirectory(d))
+    finally super.afterAll()
 }
 
 object SparkTestBase {

@@ -37,7 +37,7 @@ class ExternalJournalSpec extends SparkTestBase {
 
   test("journal replay rebuilds state, dedups at-least-once appends") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("journal").toString
+    val dir = tempDir("journal").toString
     ExternalJournal.append(Seq(rec("k1", 0, 10), rec("k1", 1, 20), rec("k2", 0, 5)).toDS(), dir)
     // at-least-once: offset 1 re-appended plus a new offset 2
     ExternalJournal.append(Seq(rec("k1", 1, 20), rec("k1", 2, 30)).toDS(), dir)
@@ -56,7 +56,7 @@ class ExternalSnapshotsSpec extends SparkTestBase {
 
   test("append-only upsert resolves last-write-wins; tombstone deletes") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("snapstore").toString
+    val dir = tempDir("snapstore").toString
     val k = (key: String) => KafkaKey("app", "g", "t", 0, key)
     // batch 1: k1@5, k2@6
     ExternalSnapshots.upsert(Seq(
@@ -80,7 +80,7 @@ class ExternalSnapshotsSpec extends SparkTestBase {
     assert(latest2 == Map("k1" -> "v1b"))
 
     // compaction preserves the resolved view
-    val compacted = Files.createTempDirectory("snapcompact").toString
+    val compacted = tempDir("snapcompact").toString
     ExternalSnapshots.compact(spark, dir, compacted)
     val afterCompact = ExternalSnapshots.readLatest(spark, compacted, "app", "g")
       .collect().map(_.getAs[String]("key")).toSet
@@ -90,7 +90,7 @@ class ExternalSnapshotsSpec extends SparkTestBase {
   test("record expiration: stale keys read as absent and compaction purges them") {
     import spark.implicits._
     import scala.concurrent.duration._
-    val dir = Files.createTempDirectory("snapttl").toString
+    val dir = tempDir("snapttl").toString
     val k = (key: String) => KafkaKey("app", "g", "t", 0, key)
     val now = 1000000L
     ExternalSnapshots.upsert(Seq(
@@ -116,7 +116,7 @@ class ExternalSnapshotsSpec extends SparkTestBase {
 
     // compaction with expiration physically purges expired keys: cutoff
     // falls between fresh (now-1000) and the revived stale write (now)
-    val compacted = Files.createTempDirectory("snapttlc").toString
+    val compacted = tempDir("snapttlc").toString
     ExternalSnapshots.compact(spark, dir, compacted,
       expiration = Some(10.seconds), nowMs = now + 9500)
     val purged = ExternalSnapshots.readLatest(spark, compacted, "app", "g")
@@ -128,7 +128,7 @@ class ExternalSnapshotsSpec extends SparkTestBase {
     "round-trip byte-identically — mixed compressed/raw, compaction too") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, length => sqlLength}
-    val dir = Files.createTempDirectory("snapz").toString
+    val dir = tempDir("snapz").toString
     def k(key: String) = graft.model.KafkaKey("app", "g", "t", 0, key)
     val rnd = new scala.util.Random(42)
     // big = 64 KiB of REPEATING text (compresses hard); raw = below the
@@ -155,7 +155,7 @@ class ExternalSnapshotsSpec extends SparkTestBase {
     assert(java.util.Arrays.equals(back("raw"), raw))
     assert(java.util.Arrays.equals(back("noise"), noise))
     // compaction preserves frames; the compacted store reads identically
-    val compacted = Files.createTempDirectory("snapzc").toString
+    val compacted = tempDir("snapzc").toString
     ExternalSnapshots.compact(spark, dir, compacted)
     val back2 = ExternalSnapshots.readLatest(spark, compacted, "app", "g")
       .collect().map(r => r.getAs[String]("key") -> r.getAs[Array[Byte]]("value")).toMap
@@ -169,7 +169,7 @@ class ExternalSnapshotsSpec extends SparkTestBase {
   test("a pre-framing store (data, no format stamp) fails loudly on read, " +
     "upsert and compact — never silently frame-decodes raw values") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("snaplegacy").toString
+    val dir = tempDir("snaplegacy").toString
     def k(key: String) = graft.model.KafkaKey("app", "g", "t", 0, key)
     // a legacy writer: raw value bytes straight to parquet, no stamp.
     // 0x00 first byte is the worst case — the frame decoder would
@@ -185,13 +185,39 @@ class ExternalSnapshotsSpec extends SparkTestBase {
         ExternalSnapshots.rowFor(k("k2"), 2L, "", "x".getBytes)).toDS(), dir) })
     msg(intercept[IllegalStateException] {
       ExternalSnapshots.compact(spark, dir,
-        Files.createTempDirectory("snaplegacyc").toString) })
+        tempDir("snaplegacyc").toString) })
     // an unknown future stamp is rejected too (no best-effort decode)
     val out = new java.io.FileOutputStream(new java.io.File(dir, "_graft_store_format"))
     try out.write("framed-v99".getBytes("UTF-8")) finally out.close()
     val e = intercept[IllegalArgumentException] {
       ExternalSnapshots.readLatest(spark, dir, "app", "g").collect() }
     assert(e.getMessage.contains("framed-v99"))
+  }
+
+  test("a stamped store with no data files reads as an empty store") {
+    // what a crash between upsert's stamp and its append leaves behind
+    val dir = tempDir("snapempty")
+    Files.write(dir.resolve(ExternalSnapshots.FormatFileName),
+      ExternalSnapshots.FormatId.getBytes("UTF-8"))
+    assert(ExternalSnapshots.readLatest(spark, dir.toString, "app", "g").count() == 0)
+  }
+
+  test("ids compare as strings: group 007 and group 7 are two groups, " +
+    "in readLatest and in compact") {
+    import spark.implicits._
+    val dir = tempDir("snapids").toString
+    def row(group: String, key: String) = ExternalSnapshots.rowFor(
+      KafkaKey("app", group, "t", 0, key), 1L, "", key.getBytes("UTF-8"))
+    ExternalSnapshots.upsert(Seq(row("007", "a"), row("007", "b"), row("7", "c")).toDS(), dir)
+    def keys(store: String, group: String) =
+      ExternalSnapshots.readLatest(spark, store, "app", group)
+        .collect().map(_.getAs[String]("key")).toSet
+    assert(keys(dir, "007") == Set("a", "b"))
+    assert(keys(dir, "7") == Set("c"))
+    val compacted = tempDir("snapidsc").toString
+    ExternalSnapshots.compact(spark, dir, compacted)
+    assert(keys(compacted, "007") == Set("a", "b"))
+    assert(keys(compacted, "7") == Set("c"))
   }
 
   test("journal STREAMING source: live tail into KeyFlowTws matches batch " +

@@ -10,7 +10,7 @@ class TxnParquetSpec extends SparkTestBase {
   import org.apache.spark.sql.functions._
 
   private def base(): String =
-    java.nio.file.Files.createTempDirectory("txnpq").toString + "/table"
+    tempDir("txnpq").toString + "/table"
 
   test("publish then read round-trips; second publish swaps atomically; " +
     "old version stays readable (time travel)") {
@@ -79,7 +79,7 @@ class TxnParquetSpec extends SparkTestBase {
     val q = input.toDS().toDF("id").writeStream
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("txnstream").toString)
+        tempDir("txnstream").toString)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         if (!batch.isEmpty) { TxnParquet.publish(batch, b); () }
       }

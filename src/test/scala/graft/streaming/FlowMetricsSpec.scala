@@ -5,7 +5,6 @@ import graft.fold.FoldOption
 import graft.model.Record
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 class FlowMetricsSpec extends SparkTestBase {
@@ -27,7 +26,7 @@ class FlowMetricsSpec extends SparkTestBase {
       val fold = foldMetrics.decorate(
         FoldOption.of[Long, Record](_ => 1L)((n, _) => n + 1))
       val out = KeyFlow.flow(preprocessed, fold)
-      val ckpt = Files.createTempDirectory("graft-ckpt").toString
+      val ckpt = tempDir("graft-ckpt").toString
       val q = out.writeStream.format("memory").queryName("metrics")
         .outputMode("update").option("checkpointLocation", ckpt).start()
       input.addData(rec("a", 0), rec("drop", 1), rec("a", 2))

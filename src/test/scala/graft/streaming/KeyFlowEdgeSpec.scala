@@ -6,7 +6,6 @@ import graft.model.Record
 import org.apache.spark.SparkConf
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Edge semantics: topic-namespaced state, poison-record resilience via
@@ -28,7 +27,7 @@ class KeyFlowEdgeSpec extends SparkTestBase {
       config = KeyFlowConfig(namespaceByTopic = true))
     val q = out.writeStream.format("memory").queryName("ns")
       .outputMode("update")
-      .option("checkpointLocation", Files.createTempDirectory("ns").toString)
+      .option("checkpointLocation", tempDir("ns").toString)
       .start()
     input.addData(rec("t1", "k", 0), rec("t1", "k", 1), rec("t2", "k", 0))
     q.processAllAvailable()
@@ -93,7 +92,7 @@ class KeyFlowEdgeSpec extends SparkTestBase {
       config = KeyFlowConfig(maxOffsetDifference = Some(100L)))
     val q = out.writeStream.format("memory").queryName("clk")
       .outputMode("update")
-      .option("checkpointLocation", Files.createTempDirectory("clk").toString)
+      .option("checkpointLocation", tempDir("clk").toString)
       .start()
     input.addData(rec("small", "a", 0), rec("small", "a", 1),
       rec("big", "b", 1000000L))
@@ -116,7 +115,7 @@ class KeyFlowEdgeSpec extends SparkTestBase {
     val out = KeyFlow.flow(input.toDS(), countFold)
     val q = out.writeStream.format("memory").queryName("nullts")
       .outputMode("update")
-      .option("checkpointLocation", Files.createTempDirectory("nullts").toString)
+      .option("checkpointLocation", tempDir("nullts").toString)
       .start()
     input.addData(
       Record("t", 0, 0, null, 0, "k", Array.empty[Byte], Map.empty),
@@ -143,7 +142,7 @@ class KeyFlowEdgeSpec extends SparkTestBase {
     val out = KeyFlow.flow(input.toDS(), fold)
     val q = out.writeStream.format("memory").queryName("poison")
       .outputMode("update")
-      .option("checkpointLocation", Files.createTempDirectory("poison").toString)
+      .option("checkpointLocation", tempDir("poison").toString)
       .start()
     input.addData(rec("t", "k1", 0), rec("t", "k1", 1, "poison"), rec("t", "k1", 2))
     q.processAllAvailable()
@@ -162,7 +161,7 @@ class KeyFlowEdgeSpec extends SparkTestBase {
       .dropDuplicatesWithinWatermark("id")
     val q = deduped.writeStream.format("memory").queryName("ddw")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ddw").toString)
+      .option("checkpointLocation", tempDir("ddw").toString)
       .start()
     val t0 = new Timestamp(1000L)
     input.addData(("a", t0), ("a", t0), ("b", t0))

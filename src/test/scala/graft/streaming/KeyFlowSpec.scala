@@ -5,7 +5,6 @@ import graft.fold.FoldOption
 import graft.model.Record
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Golden e2e of the streaming engine (reference persistence-kafka-it-tests/
@@ -43,7 +42,7 @@ class KeyFlowSpec extends SparkTestBase {
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[Record]
     val out = KeyFlow.flow(input.toDS(), countFold)
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = tempDir("graft-ckpt").toString
     // memory sink refuses checkpoint recovery; foreachBatch supports it
     KeyFlowSpec.golden.clear()
     def start() = out.writeStream
@@ -78,7 +77,7 @@ class KeyFlowSpec extends SparkTestBase {
       else Some(s.getOrElse(0L) + 1)
     }
     val out = KeyFlow.flow(input.toDS(), fold)
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = tempDir("graft-ckpt").toString
     val q = out.writeStream.format("memory").queryName("delrev")
       .outputMode("update").option("checkpointLocation", ckpt).start()
 
@@ -102,7 +101,7 @@ class KeyFlowSpec extends SparkTestBase {
       else Some(s.getOrElse(0L) + 1)
     }
     val out = KeyFlow.flow(input.toDS(), fold)
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = tempDir("graft-ckpt").toString
     val q = out.writeStream.format("memory").queryName("intra")
       .outputMode("update").option("checkpointLocation", ckpt).start()
     // one batch: count, count, reset, count — final state 1 (revived)
@@ -117,7 +116,7 @@ class KeyFlowSpec extends SparkTestBase {
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[Record]
     val out = KeyFlow.flow(input.toDS(), countFold)
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = tempDir("graft-ckpt").toString
     val q = out.writeStream.format("memory").queryName("dedup")
       .outputMode("update").option("checkpointLocation", ckpt).start()
     input.addData(rec("k1", 0), rec("k1", 1))
@@ -134,7 +133,7 @@ class KeyFlowSpec extends SparkTestBase {
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[Record]
     val out = KeyFlow.flow(input.toDS(), countFold)
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = tempDir("graft-ckpt").toString
     val q = out.writeStream.format("memory").queryName("nullkey")
       .outputMode("update").option("checkpointLocation", ckpt).start()
     input.addData(rec(null, 0), rec("k1", 1))
@@ -155,7 +154,7 @@ class KeyFlowSpec extends SparkTestBase {
       Some(n)
     }
     val out = KeyFlow.flowEnhanced(input.toDS(), efold)
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = tempDir("graft-ckpt").toString
     val q = out.writeStream.format("memory").queryName("enh")
       .outputMode("update").option("checkpointLocation", ckpt).start()
     input.addData(rec("k1", 0), rec("k1", 1), rec("k1", 2))
@@ -173,7 +172,7 @@ class KeyFlowSpec extends SparkTestBase {
     // single input partition so the emulated partition clock is shared
     val out = KeyFlow.flow(input.toDS().repartition(1), countFold,
       graft.fold.TickOption.id[Long], config)
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = tempDir("graft-ckpt").toString
     val q = out.writeStream.format("memory").queryName("offlag")
       .outputMode("update").option("checkpointLocation", ckpt).start()
     // same batch: k1 at offset 0, k2 at offset 100 -> k1 lags by 100 > 10
