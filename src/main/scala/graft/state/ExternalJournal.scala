@@ -22,9 +22,14 @@ import scala.reflect.runtime.universe.TypeTag
 object ExternalJournal {
 
   /** Blind-append a batch of records (idempotent under replay because
-    * `replay` dedups by (key, offset)). */
+    * `replay` dedups by (key, offset)). Each topic's rows go to one file:
+    * the job commit renames its files into place one at a time, and a
+    * [[stream]] listing between two renames would serve a key's later
+    * offset a batch before its earlier one, which the flow's replay guard
+    * then drops. One file per topic lands each append whole. */
   def append(records: Dataset[Record], journalDir: String): Unit =
-    records.write.mode(SaveMode.Append).partitionBy("topic").parquet(journalDir)
+    records.repartition(org.apache.spark.sql.functions.col("topic"))
+      .write.mode(SaveMode.Append).partitionBy("topic").parquet(journalDir)
 
   /** Rebuild per-key state by re-folding the journal in offset order.
     * Duplicate (key, offset) rows from at-least-once appends fold once. */

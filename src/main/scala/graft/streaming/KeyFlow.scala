@@ -493,7 +493,8 @@ object KeyFlow {
 
   /** Declarative entry: keyed stateful fold over a (possibly streaming)
     * Dataset[Record]. Null-key records are dropped (reference
-    * PartitionFlow.scala:160-164). */
+    * PartitionFlow.scala:160-164). Installs [[LocalCheckpointFileManager]]
+    * on the session unless it names a checkpoint file manager already. */
   def flow[S](
       records: Dataset[Record],
       fold: FoldOption[S, Record],
@@ -502,6 +503,7 @@ object KeyFlow {
       implicit stateEnc: Encoder[FlowState[S]],
       outEnc: Encoder[KeyOutput[S]]): Dataset[KeyOutput[S]] = {
     import records.sparkSession.implicits._
+    LocalCheckpointFileManager.install(records.sparkSession)
     val timeout = (config.maxIdle, config.timerDomain) match {
       case (None, _) => GroupStateTimeout.NoTimeout()
       case (Some(_), TimerDomain.Clock) => GroupStateTimeout.ProcessingTimeTimeout()

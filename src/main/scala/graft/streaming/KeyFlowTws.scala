@@ -9,11 +9,17 @@ import org.apache.spark.sql.streaming._
   * processing v2) — the preferred runtime (SURVEY.md §7.1 step 4): named
   * timers match the reference's per-key `Set[Instant]` wakeups
   * (reference timer/Timers.scala:12-66), state lives in the RocksDB state
-  * store with changelog checkpointing (the 100 TB path), and the processor
-  * carries the same fold/tick/offset-dedup semantics as [[KeyFlow]].
+  * store, and the processor carries the same fold/tick/offset-dedup
+  * semantics as [[KeyFlow]].
   *
   * Requires `spark.sql.streaming.stateStore.providerClass =
   * org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`.
+  * Commits are Spark's defaults: each microbatch uploads a RocksDB
+  * snapshot per store (changelog checkpointing is off unless the session
+  * sets `spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled`).
+  * Local checkpoint files go through [[LocalCheckpointFileManager]]
+  * (java.nio, no process per file) unless the session names another
+  * `spark.sql.streaming.checkpointFileManagerClass`.
   */
 class KeyFlowProcessor[S](
     fold: FoldOption[S, Record],
@@ -70,7 +76,8 @@ class KeyFlowProcessor[S](
       timerValues: TimerValues): Iterator[KeyOutput[S]] = {
     val sorted = rows.toArray.sortBy(_.record.offset)
     if (sorted.isEmpty) return Iterator.empty
-    val prev = if (state.exists) Option(state.get()) else None
+    // one store read: `get()` is null when absent, and `exists` is itself a get
+    val prev = Option(state.get())
     var snapOffset = prev.map(_.snapshot.offset).getOrElse(Long.MinValue)
     var current: Option[S] = prev.map(_.snapshot.value)
     val maxSeen = math.max(
@@ -184,8 +191,8 @@ class KeyFlowProcessor[S](
       key: String,
       timerValues: TimerValues,
       expiredTimerInfo: ExpiredTimerInfo): Iterator[KeyOutput[S]] = {
-    if (!state.exists) return Iterator.empty
     val st = state.get()
+    if (st == null) return Iterator.empty
     // expiry < processedAt + maxIdle ⇒ the key was active AFTER this timer
     // was registered — the timer is stale (belt-and-braces: active batches
     // delete their previous timer, but a timer can still race the batch
@@ -233,7 +240,9 @@ object KeyFlowTws {
     * (fires when the query watermark passes the key's last event time +
     * maxIdle — declare a watermark on `records` first, e.g.
     * `records.withWatermark("timestamp", "0 seconds")`). Null-key records
-    * are dropped (reference PartitionFlow.scala:160-164). */
+    * are dropped (reference PartitionFlow.scala:160-164). Installs
+    * [[LocalCheckpointFileManager]] on the session unless it names a
+    * checkpoint file manager already. */
   def flow[S](
       records: Dataset[Record],
       fold: FoldOption[S, Record],
@@ -257,6 +266,7 @@ object KeyFlowTws {
   private def prepare(records: Dataset[Record], config: KeyFlowConfig)
       : (TimeMode, org.apache.spark.sql.KeyValueGroupedDataset[String, KeyFlow.RecordEnv]) = {
     import records.sparkSession.implicits._
+    LocalCheckpointFileManager.install(records.sparkSession)
     require(config.stateTtl.isEmpty || config.timerDomain == TimerDomain.Clock,
       "stateTtl is processing-time-domain only (TWS TTL requires TimeMode.ProcessingTime)")
     val timeMode = (config.maxIdle, config.timerDomain) match {

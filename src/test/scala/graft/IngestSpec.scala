@@ -24,7 +24,7 @@ class IngestSpec extends SparkTestBase {
       .sortBy(t => (t._1, t._2)).toSeq
 
   test("CSV round trip: good rows exact, corrupt lines rejected with raw text") {
-    val tmp = Files.createTempDirectory("ingest-csv").toString
+    val tmp = tempDir("ingest-csv").toString
     truth.coalesce(1).write.option("header", "true").mode("overwrite").csv(s"$tmp/csv")
     // inject malformed lines (bad type, non-csv garbage) into a second
     // file; header line first — Spark consumes line 1 of EVERY file when
@@ -41,7 +41,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("JSONL round trip: good rows exact, unparsable lines rejected") {
-    val tmp = Files.createTempDirectory("ingest-json").toString
+    val tmp = tempDir("ingest-json").toString
     truth.coalesce(1).write.mode("overwrite").json(s"$tmp/json")
     Files.writeString(java.nio.file.Paths.get(s"$tmp/json/extra.json"),
       """{"event_id": 7, "user_id": broken}""" + "\nnot json\n")
@@ -51,7 +51,7 @@ class IngestSpec extends SparkTestBase {
   }
 
   test("reject leg is empty on clean input") {
-    val tmp = Files.createTempDirectory("ingest-clean").toString
+    val tmp = tempDir("ingest-clean").toString
     truth.limit(100).write.mode("overwrite").json(s"$tmp/j")
     val (good, bad) = Ingest.jsonlWithRejects(spark, s"$tmp/j", schema)
     assert(good.count() === 100 && bad.count() === 0)

@@ -23,7 +23,7 @@ class LayoutSpec extends SparkTestBase {
 
   test("z-order bounds both dimensions; linear leaves one full-span") {
     val base = Tables(spark, dir, "lineitem").select("l_partkey", "l_suppkey")
-    val tmp = java.nio.file.Files.createTempDirectory("layout").toString
+    val tmp = tempDir("layout").toString
     Layout.zorderWrite(base, "l_partkey", "l_suppkey", s"$tmp/z", files)
     Layout.linearWrite(base, "l_partkey", s"$tmp/lin", files)
     val (z, lin) = (boxes(s"$tmp/z"), boxes(s"$tmp/lin"))
@@ -56,7 +56,7 @@ class LayoutSpec extends SparkTestBase {
     "re-layout partition) instead of NPE-ing on null min/max stats") {
     val base = Tables(spark, dir, "lineitem").select("l_partkey", "l_suppkey")
     val empty = base.filter(col("l_partkey") < 0)
-    val tmp = java.nio.file.Files.createTempDirectory("layout_empty").toString
+    val tmp = tempDir("layout_empty").toString
     Layout.zorderWrite(empty, "l_partkey", "l_suppkey", s"$tmp/z", 4)
     Layout.zorderWriteN(empty, Seq("l_partkey", "l_suppkey"), s"$tmp/zn", 4)
     Layout.hilbertWrite(empty, "l_partkey", "l_suppkey", s"$tmp/h", 4)
@@ -68,7 +68,7 @@ class LayoutSpec extends SparkTestBase {
   test("compaction plan covers every file once, bounds group bytes, and " +
     "executing it preserves rows while shrinking the file count") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("compact").toString
+    val tmp = tempDir("compact").toString
     // 40 deliberately tiny files
     (1 to 10000).map(i => (i.toLong, s"v$i")).toDF("id", "v")
       .repartition(40).write.mode("overwrite").parquet(s"$tmp/small")

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** Partitioned-table write semantics: directory layout, partition-pruned
   * reads, and DYNAMIC partition overwrite (an incremental re-crawl must
   * replace only the partitions it touches — static mode would silently
@@ -11,7 +9,7 @@ import java.nio.file.Files
 class PartitionedWriteSpec extends SparkTestBase {
 
   test("dynamic partition overwrite replaces only the touched partitions") {
-    val tmp = Files.createTempDirectory("pwrite").toString
+    val tmp = tempDir("pwrite").toString
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
       .select("doc_id", "source", "n_chars")
 

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** Additive schema evolution across parquet snapshot generations — the
   * intake reality of any long-lived 100 TB table: older files lack the
   * newer columns and must read as nulls under one unified schema, with
@@ -12,7 +10,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
   import spark.implicits._
 
   test("mergeSchema unifies generations; old files read new columns as null") {
-    val tmp = Files.createTempDirectory("schema-evo").toString
+    val tmp = tempDir("schema-evo").toString
     // generation 1: (id, v)
     Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .write.mode("overwrite").parquet(s"$tmp/t/gen=1")
@@ -38,7 +36,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
   }
 
   test("missing-column read with an explicit schema yields typed nulls") {
-    val tmp = Files.createTempDirectory("schema-evo2").toString
+    val tmp = tempDir("schema-evo2").toString
     Seq((1L, "a")).toDF("id", "v").write.mode("overwrite").parquet(s"$tmp/old")
     val withNew = spark.read
       .schema("id LONG, v STRING, score DOUBLE")

@@ -84,7 +84,7 @@ class SmjArrayDetectorSpec extends SparkTestBase {
     // estimate only, no rowCount) must still flag.
     import spark.implicits._
     val big = (1 to 500).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-    val dir = java.nio.file.Files.createTempDirectory("bcast-exact").toString
+    val dir = tempDir("bcast-exact").toString
     spark.conf.set(graft.operators.Lineage.ConfKey, dir)
     try {
       val ck = graft.operators.Lineage.cut(

@@ -94,7 +94,7 @@ class HilbertKeySpec extends SparkTestBase {
 
   test("hilbertWrite produces files whose boxes beat linear layout on both dims") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("hilbert").toString
+    val dir = tempDir("hilbert").toString
     val df = (0 until 4096).map(i => (i % 64, i / 64)).toDF("a", "b")
     graft.operators.Layout.hilbertWrite(df, "a", "b", s"$dir/h", 8)
     graft.operators.Layout.linearWrite(df, "a", s"$dir/l", 8)

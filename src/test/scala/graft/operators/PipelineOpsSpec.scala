@@ -815,7 +815,7 @@ class PipelineOpsSpec extends SparkTestBase {
     val emb = rows.toDF("vec_id", "embedding")
     val queries = emb.filter(col("vec_id") < 2)
     val index = IvfIndex.build(emb, "embedding", nlist = 2, seed = 42L)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_store").toString
+    val dir = tempDir("ivf_store").toString
     val path = s"$dir/centroids"
     // stamped with the fingerprint getOrBuild will ask for below
     IvfIndex.save(spark, index, path,

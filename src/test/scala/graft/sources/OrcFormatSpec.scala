@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   */
 class OrcFormatSpec extends SparkTestBase {
 
-  private lazy val dir = java.nio.file.Files.createTempDirectory("orc").toString
+  private lazy val dir = tempDir("orc").toString
 
   test("parquet -> ORC -> read round-trips row-identically") {
     val src = Tables(spark, "/root/testdata/sf0.001", "lineitem")

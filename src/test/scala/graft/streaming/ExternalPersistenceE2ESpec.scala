@@ -6,7 +6,6 @@ import graft.model.{KafkaKey, Record}
 import graft.state.ExternalSnapshots
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** The reference's core durability story end-to-end: the flow persists
@@ -23,8 +22,8 @@ class ExternalPersistenceE2ESpec extends SparkTestBase {
   test("flow -> foreachBatch -> external snapshots survives restart and replay") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val store = Files.createTempDirectory("ext-store").toString
-    val ckpt = Files.createTempDirectory("ext-ckpt").toString
+    val store = tempDir("ext-store").toString
+    val ckpt = tempDir("ext-ckpt").toString
     val countFold = FoldOption.of[Long, Record](_ => 1L)((n, _) => n + 1)
     val input = MemoryStream[Record]
     val out = KeyFlow.flow(input.toDS(), countFold)
@@ -79,8 +78,8 @@ class ExternalPersistenceE2ESpec extends SparkTestBase {
 
     // drive the SAME input sequence through a failing and a clean pipeline
     def runPipeline(failBatchWithOffset3: Boolean): Map[String, (Long, String)] = {
-      val store = Files.createTempDirectory("ext-store-fi").toString
-      val ckpt = Files.createTempDirectory("ext-ckpt-fi").toString
+      val store = tempDir("ext-store-fi").toString
+      val ckpt = tempDir("ext-ckpt-fi").toString
       val countFold = FoldOption.of[Long, Record](_ => 1L)((n, _) => n + 1)
       val input = MemoryStream[Record]
       val out = KeyFlow.flow(input.toDS(), countFold)

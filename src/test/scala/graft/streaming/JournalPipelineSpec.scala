@@ -8,7 +8,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** The reference's canonical pipeline end to end, composed from the same
@@ -35,8 +34,8 @@ class JournalPipelineSpec extends SparkTestBase {
   test("journal decode -> keyed fold -> external snapshots survives restart and replay") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val store = Files.createTempDirectory("jp-store").toString
-    val ckpt = Files.createTempDirectory("jp-ckpt").toString
+    val store = tempDir("jp-store").toString
+    val ckpt = tempDir("jp-ckpt").toString
     val payloadSchema = new StructType().add("amount_cents", LongType)
 
     val input = MemoryStream[Record]

@@ -5,7 +5,6 @@ import graft.fold.FoldOption
 import graft.model.Record
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Runtime evidence for the Kafka-source surface WITHOUT a broker — this
@@ -96,7 +95,7 @@ class KafkaSurfaceSpec extends SparkTestBase {
     val records = KafkaFlowSpark.decodeKafka(input.toDF())
     val countFold = FoldOption.of[Long, Record](_ => 1L)((n, _) => n + 1)
     val out = KafkaFlowSpark.flow(records, countFold)
-    val ckpt = Files.createTempDirectory("kafka-schema-e2e").toString
+    val ckpt = tempDir("kafka-schema-e2e").toString
     KafkaSurfaceSpec.golden.clear()
     def start() = out.writeStream
       .outputMode("update").option("checkpointLocation", ckpt)

@@ -5,7 +5,6 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 import scala.concurrent.duration._
 
@@ -24,7 +23,7 @@ class QuerySupervisorSpec extends SparkTestBase {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[Long]
-    val ckpt = Files.createTempDirectory("sup").toString
+    val ckpt = tempDir("sup").toString
     failuresLeft.set(2) // poison the first two batch attempts
     seen.clear()
     val active = new AtomicReference[StreamingQuery]()
@@ -68,7 +67,7 @@ class QuerySupervisorSpec extends SparkTestBase {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[Long]
-    val ckpt = Files.createTempDirectory("sup2").toString
+    val ckpt = tempDir("sup2").toString
     failuresLeft.set(Int.MaxValue) // never heals
     input.addData(1L)
     val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {

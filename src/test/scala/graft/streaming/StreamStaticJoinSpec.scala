@@ -4,8 +4,6 @@ import graft.{SparkTestBase, Tables}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** Stream-static enrichment join: a stream of events joins the static
   * customer dim (parquet). The static side is re-planned per microbatch and
   * broadcast when small — the standard dimension-enrichment shape for a
@@ -23,7 +21,7 @@ class StreamStaticJoinSpec extends SparkTestBase {
       .select("custkey", "c_mktsegment", "amount")
     val q = enriched.writeStream.format("memory").queryName("enrich")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("enrich").toString)
+      .option("checkpointLocation", tempDir("enrich").toString)
       .start()
     input.addData((0L, 10.0), (1L, 20.0), (99999999L, 5.0)) // last has no dim row
     q.processAllAvailable()

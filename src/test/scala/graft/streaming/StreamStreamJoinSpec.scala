@@ -4,7 +4,6 @@ import graft.SparkTestBase
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Stream-stream interval join with watermarks on both sides (SURVEY §2.8 —
@@ -27,7 +26,7 @@ class StreamStreamJoinSpec extends SparkTestBase {
       .select("purchase_id", "click_id")
     val q = joined.writeStream.format("memory").queryName("ssj")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ssj").toString)
+      .option("checkpointLocation", tempDir("ssj").toString)
       .start()
 
     clicks.addData((1L, ts(1), 100L), (1L, ts(8), 101L), (2L, ts(2), 200L))
