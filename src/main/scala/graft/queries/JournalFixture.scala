@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,9 +20,10 @@ import org.apache.spark.sql.functions._
   *
   * The fixture key is the events table's [[Tables.fingerprint]] (file
   * metadata, no data read), so a regenerated sf dir re-encodes instead of
-  * serving a stale fixture; a missing `_SUCCESS` marker (crashed writer)
-  * also re-encodes. The fixture is read through [[Tables.parquet]], whose
-  * schema memo keys on the same fingerprint.
+  * serving a stale fixture, and the encode deletes the stale one; a
+  * missing `_SUCCESS` marker (crashed writer) also re-encodes. The fixture
+  * is read through [[Tables.parquet]], whose schema memo keys on the same
+  * fingerprint.
   */
 object JournalFixture {
 
@@ -31,19 +32,38 @@ object JournalFixture {
   def encoded(spark: SparkSession, dir: String): DataFrame = {
     val path = new Path(fixturePath(spark, dir))
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(path, "_SUCCESS")))
+    if (!fs.exists(new Path(path, "_SUCCESS"))) {
       encode(spark, dir).write.mode("overwrite").parquet(path.toString)
+      dropStale(fs, path)
+    }
     Tables.parquet(spark, path.toString)
   }
 
+  /** `graft_fixtures/journal_<hash of dir>_<hash of its fingerprint>`. */
   private def fixturePath(spark: SparkSession, dir: String): String = {
     val events = new Path(dir, "events.parquet")
     val fs = events.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stamp = Tables.fingerprint(fs, events)
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$stamp".getBytes("UTF-8"))
+    s"${sys.props("java.io.tmpdir")}/graft_fixtures/journal_${md5(dir)}_${md5(stamp)}"
+  }
+
+  private def md5(s: String): String =
+    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(16)
-    s"${sys.props("java.io.tmpdir")}/graft_fixtures/journal_$h"
+
+  /** Deletes the fixtures that can no longer match: those of the same
+    * events dir under an older fingerprint, and those named by a single
+    * hash of dir and fingerprint, as earlier versions of this code did.
+    * Other dirs' fixtures stay. */
+  private[queries] def dropStale(fs: FileSystem, fresh: Path): Unit = {
+    val Array(_, dirKey, _) = fresh.getName.split('_')
+    fs.listStatus(fresh.getParent).map(_.getPath).filter { p =>
+      p.getName.split('_') match {
+        case Array("journal", _) => true
+        case Array("journal", d, _) => d == dirKey && p.getName != fresh.getName
+        case _ => false
+      }
+    }.foreach(fs.delete(_, true))
   }
 
   /** The encode: 3 events per append, kafka-journal JSON envelope + action

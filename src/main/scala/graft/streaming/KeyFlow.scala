@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.fold.{FoldOption, TickOption}
 import graft.model.{Record, Snapshot}
-import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import scala.concurrent.duration.Duration
@@ -95,9 +95,10 @@ final case class KeyFlowConfig(
   *
   * `processedAtMs` is the key's timer BASIS in the configured
   * [[TimerDomain]]: wall-clock ms of the last touch (Clock) or the max
-  * event-time ms folded so far (Watermark). The registered timer is always
-  * exactly `processedAtMs + maxIdle`, which is what makes precise timer
-  * deletion and the stale-timer check possible. */
+  * event-time ms folded so far (Watermark). The key's deadline is
+  * `processedAtMs + maxIdle`: [[KeyFlow]] sets its timeout there, and
+  * [[KeyFlowTws]] keeps one timer at or before it, re-armed at the
+  * deadline when it fires early. */
 final case class FlowState[S](
     snapshot: Snapshot[S],
     processedAtMs: Long,
@@ -124,6 +125,21 @@ final case class KeyOutput[S](
   *    None — or `removeOnIdle` — removes the key.
   */
 object KeyFlow {
+  /** Spark's conf that makes a RocksDB state store commit a changelog per
+    * microbatch instead of a snapshot upload. */
+  val ChangelogConfKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+  /** Set the engine's streaming defaults on the session, each only where
+    * the session has no value for it, so a user's explicit setting wins:
+    * [[LocalCheckpointFileManager]] as the checkpoint file manager, and
+    * changelog checkpointing for RocksDB state. Called by the flow entry
+    * points, before the caller's `start()`; it applies to every streaming
+    * query the session starts afterwards. */
+  private[streaming] def installSessionDefaults(spark: SparkSession): Unit =
+    Seq(LocalCheckpointFileManager.ConfKey -> classOf[LocalCheckpointFileManager].getName,
+        ChangelogConfKey -> "true").foreach { case (k, v) =>
+      if (spark.conf.getOption(k).isEmpty) spark.conf.set(k, v)
+    }
 
   /** Record plus the max offset observed in its OWN source
     * (topic, partition) this batch — the emulated partition-wide offset
@@ -493,8 +509,8 @@ object KeyFlow {
 
   /** Declarative entry: keyed stateful fold over a (possibly streaming)
     * Dataset[Record]. Null-key records are dropped (reference
-    * PartitionFlow.scala:160-164). Installs [[LocalCheckpointFileManager]]
-    * on the session unless it names a checkpoint file manager already. */
+    * PartitionFlow.scala:160-164). Installs the session defaults of
+    * [[installSessionDefaults]]. */
   def flow[S](
       records: Dataset[Record],
       fold: FoldOption[S, Record],
@@ -503,7 +519,7 @@ object KeyFlow {
       implicit stateEnc: Encoder[FlowState[S]],
       outEnc: Encoder[KeyOutput[S]]): Dataset[KeyOutput[S]] = {
     import records.sparkSession.implicits._
-    LocalCheckpointFileManager.install(records.sparkSession)
+    installSessionDefaults(records.sparkSession)
     val timeout = (config.maxIdle, config.timerDomain) match {
       case (None, _) => GroupStateTimeout.NoTimeout()
       case (Some(_), TimerDomain.Clock) => GroupStateTimeout.ProcessingTimeTimeout()

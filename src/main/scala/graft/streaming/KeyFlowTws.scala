@@ -14,12 +14,28 @@ import org.apache.spark.sql.streaming._
   *
   * Requires `spark.sql.streaming.stateStore.providerClass =
   * org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`.
-  * Commits are Spark's defaults: each microbatch uploads a RocksDB
-  * snapshot per store (changelog checkpointing is off unless the session
-  * sets `spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled`).
-  * Local checkpoint files go through [[LocalCheckpointFileManager]]
-  * (java.nio, no process per file) unless the session names another
-  * `spark.sql.streaming.checkpointFileManagerClass`.
+  *
+  * Commit mode: the flow entry points turn on RocksDB changelog
+  * checkpointing, so a microbatch commits one changelog file per store
+  * instead of a flush, a local checkpoint and an SST upload per store.
+  * A session that sets
+  * `spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled`
+  * itself keeps its value; `false` opts out. A checkpoint may move between
+  * the two modes across restarts. Local checkpoint files go through
+  * [[LocalCheckpointFileManager]] (java.nio, no process per file) unless
+  * the session names another `spark.sql.streaming.checkpointFileManagerClass`.
+  *
+  * Idle timer invariant: a live key has exactly one pending `maxIdle`
+  * timer, at or before `processedAtMs + maxIdle` (its deadline). The timer
+  * is registered when the key gets its first state and is not moved while
+  * the key stays active; activity only advances `processedAtMs`. When the
+  * timer fires before the deadline, [[handleExpiredTimer]] re-arms it at
+  * the deadline and emits nothing. When the deadline has passed too, the
+  * key ticks in that batch, as a timer set at the deadline would have.
+  * A removed key has no pending timer. The exception is state expired by
+  * `stateTtl`, which leaves its timer behind. It fires into no state, or
+  * checks a later incarnation's deadline like that key's own timer does,
+  * so no deadline ticks twice.
   */
 class KeyFlowProcessor[S](
     fold: FoldOption[S, Record],
@@ -157,13 +173,6 @@ class KeyFlowProcessor[S](
       }
     }
     val lagged = config.maxOffsetDifference.exists(d => maxSeen - snapOffset > d)
-    // The previously registered timer expires at prev.processedAtMs +
-    // maxIdle exactly (processedAtMs is kept in lockstep with every
-    // registerTimer call, in BOTH timer domains), so it can be deleted
-    // precisely — otherwise one obsolete timer accumulates per active
-    // batch until it fires and no-ops.
-    def deletePrevTimer(): Unit =
-      for (d <- config.maxIdle; p <- prev) getHandle.deleteTimer(p.processedAtMs + d.toMillis)
     current match {
       case Some(s) if !lagged =>
         // timer basis in the configured domain: wall clock, or the key's
@@ -174,13 +183,16 @@ class KeyFlowProcessor[S](
           case TimerDomain.Watermark => basis
         }
         state.update(FlowState(Snapshot(snapOffset, "", s), now, maxSeen))
-        config.maxIdle.foreach { d =>
-          deletePrevTimer()
-          getHandle.registerTimer(now + d.toMillis)
-        }
+        // a live key keeps the timer it was given with its first state:
+        // moving the deadline forward moves processedAtMs only, and the
+        // timer re-arms itself at the deadline when it fires early
+        if (prev.isEmpty) config.maxIdle.foreach(d => getHandle.registerTimer(now + d.toMillis))
         retro.iterator ++ Iterator.single(KeyOutput(key, snapOffset, Some(s), tombstone = false))
       case _ =>
-        deletePrevTimer() // removed keys must not leave a pending timer
+        // removed keys must not leave a pending timer; the timer sits at
+        // or before the deadline, so it is found by listing, not computed
+        if (prev.isDefined && config.maxIdle.isDefined)
+          getHandle.listTimers().toList.foreach(getHandle.deleteTimer)
         state.clear()
         if (config.tickEveryOffsets.isDefined) offsetBasis.clear()
         retro.iterator ++ Iterator.single(KeyOutput[S](key, snapOffset, None, tombstone = true))
@@ -193,13 +205,16 @@ class KeyFlowProcessor[S](
       expiredTimerInfo: ExpiredTimerInfo): Iterator[KeyOutput[S]] = {
     val st = state.get()
     if (st == null) return Iterator.empty
-    // expiry < processedAt + maxIdle ⇒ the key was active AFTER this timer
-    // was registered — the timer is stale (belt-and-braces: active batches
-    // delete their previous timer, but a timer can still race the batch
-    // that supersedes it)
-    val stale = config.maxIdle.exists(d =>
-      expiredTimerInfo.getExpiryTimeInMs() < st.processedAtMs + d.toMillis)
-    if (stale) {
+    val maxIdleMs = config.maxIdle.fold(0L)(_.toMillis)
+    val deadline = st.processedAtMs + maxIdleMs
+    // the timer's own clock: Spark fires a timer once this reaches its expiry
+    val clock = config.timerDomain match {
+      case TimerDomain.Clock => timerValues.getCurrentProcessingTimeInMs()
+      case TimerDomain.Watermark => timerValues.getCurrentWatermarkInMs()
+    }
+    if (deadline > clock) {
+      // the key was active after this timer was armed: wait for the deadline
+      getHandle.registerTimer(deadline)
       Iterator.empty
     } else {
       val ticked = tick.run(Some(st.snapshot.value))
@@ -209,24 +224,16 @@ class KeyFlowProcessor[S](
         if (config.tickEveryOffsets.isDefined) offsetBasis.clear()
         Iterator.single(KeyOutput[S](key, st.snapshot.offset, None, tombstone = true))
       } else {
-        // processedAtMs moves with the re-registered timer so the stale
-        // check and precise timer deletion stay exact. In the watermark
-        // domain the new basis is this timer's expiry CLAMPED to the
-        // current watermark (mirroring the classic engine's timed-out
-        // branch): a timer fires only once the watermark has REACHED its
-        // expiry, so when the watermark jumped more than maxIdle past the
-        // expiry, re-arming at expiry + maxIdle would land at or below the
+        // the new basis is the current time in the timer's domain, not the
+        // deadline (mirroring the classic engine's timed-out branch): when
+        // the watermark jumped more than maxIdle past the deadline,
+        // re-arming at deadline + maxIdle would land at or below the
         // watermark and fire again next microbatch — one spurious tick per
-        // maxIdle of event-time gap. The clamp makes a long gap tick
-        // exactly once, matching the retroactive path in handleInputRows.
-        val now = config.timerDomain match {
-          case TimerDomain.Clock => timerValues.getCurrentProcessingTimeInMs()
-          case TimerDomain.Watermark =>
-            math.max(expiredTimerInfo.getExpiryTimeInMs(), timerValues.getCurrentWatermarkInMs())
-        }
+        // maxIdle of event-time gap. This way a long gap ticks exactly
+        // once, matching the retroactive path in handleInputRows.
         state.update(st.copy(
-          snapshot = st.snapshot.copy(value = ticked.get), processedAtMs = now))
-        config.maxIdle.foreach(d => getHandle.registerTimer(now + d.toMillis))
+          snapshot = st.snapshot.copy(value = ticked.get), processedAtMs = clock))
+        getHandle.registerTimer(clock + maxIdleMs)
         Iterator.single(KeyOutput(key, st.snapshot.offset, ticked, tombstone = false))
       }
     }
@@ -240,9 +247,9 @@ object KeyFlowTws {
     * (fires when the query watermark passes the key's last event time +
     * maxIdle — declare a watermark on `records` first, e.g.
     * `records.withWatermark("timestamp", "0 seconds")`). Null-key records
-    * are dropped (reference PartitionFlow.scala:160-164). Installs
-    * [[LocalCheckpointFileManager]] on the session unless it names a
-    * checkpoint file manager already. */
+    * are dropped (reference PartitionFlow.scala:160-164). Installs the
+    * session defaults of [[KeyFlow.installSessionDefaults]]: changelog
+    * commits and [[LocalCheckpointFileManager]]. */
   def flow[S](
       records: Dataset[Record],
       fold: FoldOption[S, Record],
@@ -266,7 +273,7 @@ object KeyFlowTws {
   private def prepare(records: Dataset[Record], config: KeyFlowConfig)
       : (TimeMode, org.apache.spark.sql.KeyValueGroupedDataset[String, KeyFlow.RecordEnv]) = {
     import records.sparkSession.implicits._
-    LocalCheckpointFileManager.install(records.sparkSession)
+    KeyFlow.installSessionDefaults(records.sparkSession)
     require(config.stateTtl.isEmpty || config.timerDomain == TimerDomain.Clock,
       "stateTtl is processing-time-domain only (TWS TTL requires TimeMode.ProcessingTime)")
     val timeMode = (config.maxIdle, config.timerDomain) match {

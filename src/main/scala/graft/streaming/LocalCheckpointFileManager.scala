@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{BufferedFSInputStream, FSDataInputStream, FSInputStream, FileAlreadyExistsException, FileStatus, FileSystem, Path, PathFilter}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
@@ -66,14 +65,6 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
 object LocalCheckpointFileManager {
   /** Spark's conf naming the checkpoint file manager class. */
   val ConfKey = "spark.sql.streaming.checkpointFileManagerClass"
-
-  /** Make this manager the session's checkpoint file manager unless the
-    * user has chosen one. Called by the flow entry points, before the
-    * caller's `start()`; it applies to every streaming query the session
-    * starts afterwards. */
-  private[streaming] def install(spark: SparkSession): Unit =
-    if (spark.conf.getOption(ConfKey).isEmpty)
-      spark.conf.set(ConfKey, classOf[LocalCheckpointFileManager].getName)
 
   private def isLocalPath(path: Path, conf: Configuration): Boolean =
     Option(path.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme) == "file"

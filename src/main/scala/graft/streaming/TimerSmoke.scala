@@ -46,7 +46,7 @@ object TimerSmoke {
 
     input.addData(rec("k1", 0))
     Thread.sleep(400) // let the first batch commit and register its timer
-    input.addData(rec("k1", 1)) // activity re-registers (deletes the first timer)
+    input.addData(rec("k1", 1)) // activity moves the deadline; the first timer re-arms at it
     val deadline = System.currentTimeMillis() + 60000
     var ok = false
     while (!ok && System.currentTimeMillis() < deadline) {

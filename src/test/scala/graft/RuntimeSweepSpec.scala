@@ -90,6 +90,9 @@ class RuntimeSweepSpec extends SparkTestBase {
       RuntimeSweep.install(s1)
       RuntimeSweep.install(s2)
       RuntimeSweep.install(s2) // still idempotent per session
+      // an earlier suite's action on the shared context can still be on
+      // the listener bus; delivered now, it would count under this label
+      RuntimeSweep.drain(s1)
 
       RuntimeSweep.label = "rs_spec_second_session"
       s2.range(100).count()

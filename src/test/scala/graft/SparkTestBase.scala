@@ -23,7 +23,9 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     * to the child and `args` follow the main class — the local-cluster
     * smokes pass SPARK_HOME this way. ONE fork recipe (module opens from
     * [[graft.LocalClusterEnv]], the same list build.sbt forks with), so
-    * the copies cannot drift. */
+    * the copies cannot drift. The child's `java.io.tmpdir` is a fresh dir,
+    * deleted after the child exits, pass or fail, so the checkpoints and
+    * stores a smoke makes there go with it. */
   def forkSmoke(mainClass: String, extraClasspath: Seq[String],
                 env: Seq[(String, String)] = Nil,
                 args: Seq[String] = Nil,
@@ -34,9 +36,13 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
       if (new java.io.File(p).isDirectory) s"$p/*" else p
     }
     val cp = (System.getProperty("java.class.path") +: extras).mkString(":")
+    val tmp = java.nio.file.Files.createTempDirectory("smoke")
     val cmd = Seq(javaBin) ++ graft.LocalClusterEnv.addOpensArgs ++
-      jvmArgs ++ Seq("-Dspark.ui.enabled=false", "-cp", cp, mainClass) ++ args
-    Process(cmd, cwd = None, env: _*).!
+      Seq(s"-Djava.io.tmpdir=$tmp") ++ jvmArgs ++
+      Seq("-Dspark.ui.enabled=false", "-cp", cp, mainClass) ++ args
+    try Process(cmd, cwd = None, env: _*).!
+    finally if (!org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile))
+      System.err.println(s"forkSmoke: could not delete $tmp")
   }
 
   /** Deterministic pseudo-random text (xorshift64) — high-entropy by

@@ -80,7 +80,7 @@ class ZOrderKeySpec extends SparkTestBase {
   test("3-column zorderWriteN bounds all three dimensions per file") {
     val base = Tables(spark, "/root/testdata/sf0.001", "lineitem")
       .select("l_orderkey", "l_partkey", "l_suppkey")
-    val tmp = java.nio.file.Files.createTempDirectory("z3").toString
+    val tmp = tempDir("z3").toString
     Layout.zorderWriteN(base, Seq("l_orderkey", "l_partkey", "l_suppkey"), s"$tmp/z3", 8)
     val boxes = spark.read.parquet(s"$tmp/z3")
       .groupBy(input_file_name())

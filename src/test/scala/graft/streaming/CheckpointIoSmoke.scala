@@ -10,15 +10,19 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, TimeUnit}
+import java.util.zip.ZipInputStream
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** Streaming checkpoints through [[LocalCheckpointFileManager]], end to end
   * on a `KeyFlowTws` query over RocksDB with a `maxIdle` timer (the
-  * benchmark's shape). Forked by LocalCheckpointFileManagerSpec, because
-  * timer batches do not plan under sbt's test threads (see TimerSmoke).
+  * benchmark's shape). Forked by LocalCheckpointFileManagerSpec and
+  * KeyFlowTwsStateSpec, because timer batches do not plan under sbt's test
+  * threads (see TimerSmoke).
   *
-  * Usage: `CheckpointIoSmoke restart|forks <dir>`; exits 0 on a pass.
+  * Usage: `CheckpointIoSmoke restart|forks|commitmode <dir>` or
+  * `CheckpointIoSmoke resume <checkpoint.zip> <dir>`; exits 0 on a pass.
   *  - `restart`: one checkpoint is run under Spark's
   *    `FileContextBasedCheckpointFileManager` named by the user, then under
   *    the default the flow installs, then under Spark's again; every leg
@@ -29,11 +33,21 @@ import scala.jdk.CollectionConverters._
   *    `HDFSMetadataLog` frame. A control leg under Spark's manager must
   *    show such starts where Hadoop has no native code, so the recording
   *    is known to see them.
+  *  - `commitmode`: one checkpoint is run with changelog checkpointing set
+  *    to `false` by the user, then with the flow's default (on), then with
+  *    `false` again; every leg must resume with exact per-key state, write
+  *    its batches in the leg's commit mode, and leave the user's `false`
+  *    as set.
+  *  - `resume`: a zipped checkpoint of [[Query]] after batches 0–2 is
+  *    resumed for batches 3–5 with the flow's defaults. The state must be
+  *    exact, and every key must hold one pending timer, at or before its
+  *    deadline.
   */
 object CheckpointIoSmoke {
   private val SparkManager = classOf[FileContextBasedCheckpointFileManager].getName
   private val Keys = 23
   private val BatchRecords = 400
+  private val MaxIdle = 10.minutes
 
   private val fold = FoldOption.of[(Long, Long), Record](r => (1L, value(r))) {
     (s, r) => (s._1 + 1, s._2 + value(r))
@@ -65,7 +79,9 @@ object CheckpointIoSmoke {
     val ok = args.toSeq match {
       case Seq("restart", dir) => restart(spark, Paths.get(dir))
       case Seq("forks", dir) => forks(spark, Paths.get(dir))
-      case _ => sys.error("usage: CheckpointIoSmoke restart|forks <dir>")
+      case Seq("commitmode", dir) => commitMode(spark, Paths.get(dir))
+      case Seq("resume", zip, dir) => resume(spark, Paths.get(zip), Paths.get(dir))
+      case _ => sys.error("usage: CheckpointIoSmoke restart|forks|commitmode <dir> | resume <zip> <dir>")
     }
     spark.stop()
     sys.exit(if (ok) 0 else 1)
@@ -78,8 +94,12 @@ object CheckpointIoSmoke {
     private val input = MemoryStream[Record]
     val last = new ConcurrentHashMap[String, (Long, Long)]()
 
+    /** Feed `batches` with no query running: the offsets a checkpoint
+      * written by another process has already committed. */
+    def committed(batches: Range): Unit = batches.foreach(b => input.addData(batch(b)))
+
     def run(batches: Range): Unit = {
-      val q = KeyFlowTws.flow(input.toDS(), fold, config = KeyFlowConfig(maxIdle = Some(10.minutes)))
+      val q = KeyFlowTws.flow(input.toDS(), fold, config = KeyFlowConfig(maxIdle = Some(MaxIdle)))
         .writeStream.outputMode("update")
         .option("checkpointLocation", ckpt.toString)
         .foreachBatch { (ds: Dataset[KeyOutput[(Long, Long)]], _: Long) =>
@@ -90,36 +110,109 @@ object CheckpointIoSmoke {
     }
   }
 
+  /** Prints each check of a leg and passes when the state is exact and every check holds. */
+  private def check(query: Query, leg: String, batches: Int, cond: (String, Boolean)*): Boolean = {
+    val got = query.last.asScala.toMap
+    val checks = ("exact per-key state", got == truth(batches)) +: cond
+    checks.foreach { case (what, pass) => println(s"[ckptio] $leg: $what ${if (pass) "OK" else "FAIL"}") }
+    checks.forall(_._2)
+  }
+
   private def restart(spark: SparkSession, dir: Path): Boolean = {
     val ckpt = dir.resolve("restart")
     val query = new Query(spark, ckpt)
     def offsetFile(b: Int, crc: Boolean) =
       Files.exists(ckpt.resolve("offsets").resolve(if (crc) s".$b.crc" else b.toString))
-    def check(leg: String, batches: Int, cond: (String, Boolean)*): Boolean = {
-      val got = query.last.asScala.toMap
-      val checks = ("exact per-key state", got == truth(batches)) +: cond
-      checks.foreach { case (what, pass) => println(s"[ckptio] $leg: $what ${if (pass) "OK" else "FAIL"}") }
-      checks.forall(_._2)
-    }
 
     spark.conf.set(LocalCheckpointFileManager.ConfKey, SparkManager)
     query.run(0 until 2)
-    val leg1 = check("Spark's manager", 2,
+    val leg1 = check(query, "Spark's manager", 2,
       "user setting kept" -> (spark.conf.get(LocalCheckpointFileManager.ConfKey) == SparkManager),
       "Hadoop .crc sidecars written" -> offsetFile(1, crc = true))
 
     spark.conf.unset(LocalCheckpointFileManager.ConfKey)
     query.run(2 until 4)
-    val leg2 = check("default after Spark's", 4,
+    val leg2 = check(query, "default after Spark's", 4,
       "default installed" -> (spark.conf.get(LocalCheckpointFileManager.ConfKey) ==
         classOf[LocalCheckpointFileManager].getName),
       "batch 3 written without a sidecar" -> (offsetFile(3, crc = false) && !offsetFile(3, crc = true)))
 
     spark.conf.set(LocalCheckpointFileManager.ConfKey, SparkManager)
     query.run(4 until 6)
-    val leg3 = check("Spark's after the default", 6,
+    val leg3 = check(query, "Spark's after the default", 6,
       "batch 5 written by Spark's manager" -> offsetFile(5, crc = true))
     leg1 && leg2 && leg3
+  }
+
+  /** Names of the state store files a checkpoint holds for `batch`: its
+    * store version is `batch + 1`, committed as `<v>.changelog` or `<v>.zip`. */
+  private def storeFiles(ckpt: Path, batch: Int): Set[String] = {
+    val v = batch + 1
+    Using.resource(Files.walk(ckpt.resolve("state")))(_.iterator.asScala
+      .map(_.getFileName.toString)
+      .filter(n => n == s"$v.changelog" || n == s"$v.zip")
+      .map(_.dropWhile(_ != '.')).toSet)
+  }
+
+  private def changelogs(ckpt: Path, batches: Range): Boolean =
+    batches.forall(b => storeFiles(ckpt, b).contains(".changelog"))
+
+  private def commitMode(spark: SparkSession, dir: Path): Boolean = {
+    val ckpt = dir.resolve("commitmode")
+    val query = new Query(spark, ckpt)
+    val key = KeyFlow.ChangelogConfKey
+    // a changelog store may also upload a snapshot of a version; a
+    // snapshot store writes nothing else
+    def snapshots(batches: Range) = batches.forall(b => storeFiles(ckpt, b) == Set(".zip"))
+
+    spark.conf.set(key, "false")
+    query.run(0 until 2)
+    val leg1 = check(query, "changelog off", 2,
+      "user's false kept" -> (spark.conf.get(key) == "false"),
+      "snapshot commits" -> snapshots(0 until 2))
+
+    spark.conf.unset(key)
+    query.run(2 until 4)
+    val leg2 = check(query, "default after off", 4,
+      "default installed" -> (spark.conf.get(key) == "true"),
+      "changelog commits" -> changelogs(ckpt, 2 until 4))
+
+    spark.conf.set(key, "false")
+    query.run(4 until 6)
+    val leg3 = check(query, "off after the default", 6,
+      "user's false kept" -> (spark.conf.get(key) == "false"),
+      "snapshot commits" -> snapshots(4 until 6))
+    leg1 && leg2 && leg3
+  }
+
+  private def resume(spark: SparkSession, zip: Path, dir: Path): Boolean = {
+    val ckpt = dir.resolve("resume")
+    Using.resource(new ZipInputStream(Files.newInputStream(zip))) { in =>
+      Iterator.continually(in.getNextEntry).takeWhile(_ != null).filterNot(_.isDirectory).foreach { e =>
+        val f = ckpt.resolve(e.getName)
+        Files.createDirectories(f.getParent)
+        Files.copy(in, f)
+      }
+    }
+    val query = new Query(spark, ckpt)
+    query.committed(0 until 3)
+    query.run(3 until 6)
+    // one pending timer per key, at or before processedAtMs + maxIdle
+    val state = spark.read.format("statestore").option("path", ckpt.toString)
+      .option("stateVarName", "flowState").load()
+      .selectExpr("key.value AS key", "value.processedAtMs AS at").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val timers = spark.read.format("statestore").option("path", ckpt.toString)
+      .option("readRegisteredTimers", "true").load()
+      .selectExpr("key.value AS key", "expiration_timestamp_ms AS at").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq
+    val byKey = timers.groupBy(_._1)
+    val timersOk = byKey.keySet == state.keySet && byKey.forall { case (k, ts) =>
+      ts.size == 1 && ts.head._2 <= state(k) + MaxIdle.toMillis
+    }
+    check(query, "resumed", 6,
+      "changelog commits" -> changelogs(ckpt, 3 until 6),
+      s"one timer per key at or before its deadline (${timers.size} timers, ${state.size} keys)" -> timersOk)
   }
 
   private def forks(spark: SparkSession, dir: Path): Boolean = {

@@ -6,7 +6,6 @@ import graft.model.Record
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** SURVEY §7.5: the stateful queries must agree between their batch
@@ -37,7 +36,7 @@ class StreamBatchParitySpec extends SparkTestBase {
 
     val input = MemoryStream[Record]
     val out = KeyFlow.flow(input.toDS(), fold)
-    val ckpt = Files.createTempDirectory("parity-ckpt").toString
+    val ckpt = tempDir("parity-ckpt").toString
     val q = out.writeStream.format("memory").queryName("parity")
       .outputMode("update").option("checkpointLocation", ckpt).start()
 
@@ -274,7 +273,7 @@ class StreamBatchParitySpec extends SparkTestBase {
     val out = KeyFlow.flow(input.toDS(), last)
     val q = out.writeStream.format("memory").queryName("paritylast")
       .outputMode("update")
-      .option("checkpointLocation", Files.createTempDirectory("parity2").toString)
+      .option("checkpointLocation", tempDir("parity2").toString)
       .start()
     // deliberately out-of-order batches: old offsets replayed after new ones
     val (hi, lo) = events.partition(_.offset % 3 == 0)

@@ -4,7 +4,6 @@ import graft.SparkTestBase
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Streaming windows + watermark (SURVEY §2.8: tumbling/session windows are
@@ -25,7 +24,7 @@ class StreamingWindowsSpec extends SparkTestBase {
       .agg(count(lit(1)).as("n"), sum("value").as("total"))
     val q = agg.writeStream.format("memory").queryName("tumble")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("wm").toString)
+      .option("checkpointLocation", tempDir("wm").toString)
       .start()
     input.addData(("k1", ts(1), 1.0), ("k1", ts(4), 2.0), ("k1", ts(12), 5.0))
     q.processAllAvailable()
@@ -49,7 +48,7 @@ class StreamingWindowsSpec extends SparkTestBase {
       .agg(count(lit(1)).as("n"))
     val q = agg.writeStream.format("memory").queryName("sess")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("wm").toString)
+      .option("checkpointLocation", tempDir("wm").toString)
       .start()
     // one session (1s,3s gap<5s), then a separate session at 20s
     input.addData(("k1", ts(1), 1.0), ("k1", ts(3), 1.0), ("k1", ts(20), 1.0))

@@ -3,7 +3,7 @@ package graft.tools
 import graft.Tables
 import graft.fold.FoldOption
 import graft.model.Record
-import graft.streaming.{KeyFlowTws, KeyOutput}
+import graft.streaming.{KeyFlow, KeyFlowTws, KeyOutput}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -52,18 +52,17 @@ object StreamBench {
     if (batches - warmup < 5)
       System.err.println(s"STREAMBENCH note: only ${batches - warmup} steady " +
         "batches — use >= 8 batches for a believable median")
-    val spark = SparkSession.builder()
+    val builder = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // A/B knob: changelog checkpointing commits the batch's delta
-      // instead of uploading a full RocksDB snapshot per store per batch —
-      // the documented lever for the per-microbatch commit floor
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CHANGELOG", "false"))
-      .getOrCreate()
+    // Commit-mode A/B through Spark's own conf. Unset, the run measures
+    // what users get: the flow's default of changelog commits. Set to
+    // `false`, each store uploads a full RocksDB snapshot per batch.
+    sys.env.get("SPARK_GRAFT_CHANGELOG").foreach(builder.config(KeyFlow.ChangelogConfKey, _))
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     implicit val ctx = spark.sqlContext
