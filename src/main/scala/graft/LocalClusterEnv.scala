@@ -1,8 +1,8 @@
 package graft
 
 /** Shared plumbing for the multi-JVM (local-cluster) harnesses —
-  * LocalClusterStreamSmoke (main), and the test-scope
-  * LocalClusterParity / ExecutorLossSmoke / LocalClusterSpec. One home
+  * the test-scope LocalClusterStreamSmoke / LocalClusterParity /
+  * ExecutorLossSmoke / LocalClusterSpec. One home
   * so the JDK-17 module-opens list, the executor-classpath
   * absolutization, and the victim-pid discovery cannot drift apart
   * copy by copy (when build.sbt's jdk17AddOpens next grows an entry,
@@ -24,9 +24,15 @@ object LocalClusterEnv {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   )
 
-  /** One-string form for `spark.executor.extraJavaOptions`. */
-  def executorAddOpens: String =
-    addOpens.map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
+  /** One-string form for `spark.executor.extraJavaOptions`: the module
+    * opens plus this JVM's `java.io.tmpdir`. RocksDB and lz4-java unpack
+    * their native libraries (15 MB) into the tmpdir and delete them in a
+    * JVM exit hook, which an executor killed with `kill -9` never runs;
+    * with the driver's tmpdir the files go when the driver's own does (a
+    * `forkSmoke` child's tmpdir is deleted after it exits). */
+  def executorJavaOptions: String =
+    (addOpens.map(p => s"--add-opens=$p=ALL-UNNAMED") :+
+      s"-Djava.io.tmpdir=${System.getProperty("java.io.tmpdir")}").mkString(" ")
 
   /** Argv form for forking a child JVM directly. */
   def addOpensArgs: Seq[String] =

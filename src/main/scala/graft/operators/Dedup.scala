@@ -1057,9 +1057,10 @@ object Dedup {
   }
 
   /** Exact verification of star-edge candidates — the shared tail of
-    * [[autoClusters]]' hot leg and its STREAMING twin
-    * ([[graft.streaming.ClusterParitySmoke]]): package-private so the
-    * incremental cluster-contract smoke verifies through the SAME exact
+    * [[autoClusters]]' hot leg and its STREAMING twin (the
+    * `graft.streaming.ParityCases` case "cluster-contract parity (r14)"):
+    * package-private so the incremental cluster-contract case verifies
+    * through the SAME exact
     * kernel and plan shape as the batch operator (parity against a
     * reimplementation would prove nothing). */
   private[graft] def verifyStarEdges(docs: DataFrame, idCol: String,

@@ -73,7 +73,7 @@ object ExternalJournal {
     * (Persistence.scala:178-192) running continuously instead of as a
     * batch rebuild. At-least-once appends are safe end to end: duplicate
     * (key, offset) rows are dropped by the flow's snapshot-offset guard
-    * (P9) exactly as [[replay]] dedups them. JournalStreamSmoke pins
+    * (P9) exactly as [[replay]] dedups them. The test-scope JournalStreamSmoke pins
     * stream-vs-batch parity on the same journal, duplicates included.
     *
     * The returned Dataset is unbounded; pair with `KeyFlowTws.flow` (or

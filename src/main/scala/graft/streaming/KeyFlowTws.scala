@@ -296,7 +296,8 @@ object KeyFlowTws {
     * begins from state read out of e.g.
     * [[graft.state.ExternalSnapshots.readLatest]], and the seeded snapshot
     * offsets gate replayed records exactly like an in-checkpoint restart
-    * (BootstrapSmoke proves count continuity + replay idempotence). */
+    * (the parity case "cross-job eager recovery" in `ParityCases` proves
+    * count continuity + replay idempotence). */
   def flowWithInitialState[S](
       records: Dataset[Record],
       fold: FoldOption[S, Record],

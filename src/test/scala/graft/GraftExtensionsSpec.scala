@@ -1,25 +1,9 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
-/** Extension registration binds at session construction, so this forks a
-  * fresh JVM (same pattern as the timer test — see TimerSmoke's scaladoc). */
-class GraftExtensionsSpec extends AnyFunSuite {
+/** Extension registration binds at session construction, so this forks
+  * [[ExtensionsSmoke]] in a fresh JVM. */
+class GraftExtensionsSpec extends SparkTestBase {
   test("GraftExtensions registers SQL functions in a fresh session") {
-    import scala.sys.process._
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(javaBin) ++ addOpens ++
-      Seq("-Dspark.ui.enabled=false", "-cp", cp, "graft.ExtensionsSmoke")
-    assert(Process(cmd).! == 0, "ExtensionsSmoke forked JVM failed")
+    assert(forkSmoke("graft.ExtensionsSmoke") == 0, "ExtensionsSmoke forked JVM failed")
   }
 }

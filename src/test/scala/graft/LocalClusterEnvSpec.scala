@@ -34,7 +34,7 @@ class LocalClusterEnvSpec extends AnyFunSuite {
     assert(LocalClusterEnv.addOpens.size == 13)
     assert(LocalClusterEnv.addOpens.contains("java.base/sun.nio.ch"))
     assert(LocalClusterEnv.addOpens.contains("java.base/sun.util.calendar"))
-    assert(LocalClusterEnv.executorAddOpens.startsWith(
+    assert(LocalClusterEnv.executorJavaOptions.startsWith(
       "--add-opens=java.base/java.lang=ALL-UNNAMED"))
     assert(LocalClusterEnv.addOpensArgs.size == 26)
   }

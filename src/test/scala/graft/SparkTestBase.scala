@@ -11,9 +11,10 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   /** Fork a smoke `main` in a fresh JVM and return its exit code. Spark
     * 4.1's stateful exec nodes NPE (PythonSQLMetrics / null session) when
     * timer batches are planned under the sbt test harness's thread
-    * context; the engine is fine in a plain JVM, so timer-path smokes run
-    * through this (TimerSmoke, WatermarkSmoke, TtlSmoke,
-    * SessionParitySmoke). */
+    * context; the engine is fine in a plain JVM, so stateful checks run
+    * through this: the stream/batch parity groups (one child per group,
+    * see `graft.streaming.Parity`) and the smokes that need a JVM of their
+    * own (ExtensionsSmoke, the local-cluster and broker smokes). */
   def forkSmoke(mainClass: String): Int = forkSmoke(mainClass, Nil)
 
   /** [[forkSmoke]] with extra classpath entries appended to the child JVM

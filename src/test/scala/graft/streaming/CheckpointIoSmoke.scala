@@ -19,7 +19,7 @@ import scala.util.Using
   * on a `KeyFlowTws` query over RocksDB with a `maxIdle` timer (the
   * benchmark's shape). Forked by LocalCheckpointFileManagerSpec and
   * KeyFlowTwsStateSpec, because timer batches do not plan under sbt's test
-  * threads (see TimerSmoke).
+  * threads (see Parity).
   *
   * Usage: `CheckpointIoSmoke restart|forks|commitmode <dir>` or
   * `CheckpointIoSmoke resume <checkpoint.zip> <dir>`; exits 0 on a pass.
@@ -194,6 +194,12 @@ object CheckpointIoSmoke {
         Files.copy(in, f)
       }
     }
+    // the operator metadata names the state schema file by the absolute
+    // path it was written at; point it at the unpacked copy
+    val meta = ckpt.resolve("state/0/_metadata/v2/0")
+    val text = new String(Files.readAllBytes(meta), "UTF-8")
+    val written = "\"file:([^\"]*)/state/0/_stateSchema/".r.findFirstMatchIn(text).get.group(1)
+    Files.write(meta, text.replace(s"file:$written/", s"file:${ckpt.toAbsolutePath}/").getBytes("UTF-8"))
     val query = new Query(spark, ckpt)
     query.committed(0 until 3)
     query.run(3 until 6)

@@ -23,7 +23,7 @@ import java.sql.Timestamp
   * Sum-fold over per-record payload values (exact integers) so any dropped,
   * duplicated, or reordered record changes the answer. Exits 0 iff the
   * per-key final states match exactly. Forked by ExternalJournalSpec
-  * (Spark 4.1 stateful exec NPEs under the sbt harness — see TimerSmoke).
+  * (Spark 4.1 stateful exec NPEs under the sbt harness — see Parity).
   */
 object JournalStreamSmoke {
   def main(args: Array[String]): Unit = {

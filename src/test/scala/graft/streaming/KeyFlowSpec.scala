@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.SparkTestBase
 import graft.fold.FoldOption
 import graft.model.Record
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -18,7 +17,7 @@ object KeyFlowSpec {
   val golden = new java.util.concurrent.ConcurrentHashMap[String, Option[Long]]()
 }
 
-class KeyFlowSpec extends SparkTestBase {
+class KeyFlowSpec extends ForkedParity {
   import scala.jdk.CollectionConverters._
 
   private def rec(key: String, offset: Long, value: String = ""): Record =
@@ -184,25 +183,6 @@ class KeyFlowSpec extends SparkTestBase {
     q.stop()
   }
 
-  test("maxIdle timer ticks and unloads the key (T5, transformWithState)") {
-    assert(forkSmoke("graft.streaming.TimerSmoke") == 0,
-      "TimerSmoke forked JVM reported timer failure")
-  }
-
-  test("watermark-domain timer: advancing the watermark via another key " +
-    "expires an idle key in both engines (T1 watermark domain)") {
-    assert(forkSmoke("graft.streaming.WatermarkSmoke") == 0,
-      "WatermarkSmoke forked JVM reported watermark-timer failure")
-  }
-
-  test("native state TTL ages state out inside the engine (RecordExpiration analogue)") {
-    assert(forkSmoke("graft.streaming.TtlSmoke") == 0,
-      "TtlSmoke forked JVM reported state-TTL failure")
-  }
-
-  test("user offset-domain timers: tickEveryOffsets fires on partition-clock " +
-    "windows with per-key bases (T9, KafkaTimer.Offset analogue)") {
-    assert(forkSmoke("graft.streaming.OffsetTimerSmoke") == 0,
-      "OffsetTimerSmoke forked JVM reported offset-timer failure")
-  }
+  // the timer paths run in one forked child (see Parity)
+  parityTests("timers")
 }

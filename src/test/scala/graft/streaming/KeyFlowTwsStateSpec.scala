@@ -4,7 +4,7 @@ import graft.SparkTestBase
 
 /** `KeyFlowTws`'s per-batch state work: one idle timer per live key, and
   * changelog commits by default. Each case forks a smoke, because timer
-  * batches do not plan under sbt's test threads (see TimerSmoke). */
+  * batches do not plan under sbt's test threads (see Parity). */
 class KeyFlowTwsStateSpec extends SparkTestBase {
 
   private def smoke(main: String, args: String*): Int =

@@ -102,7 +102,7 @@ object LocalClusterStreamSmoke {
         .config("spark.executor.extraClassPath",
           graft.LocalClusterEnv.absoluteClasspath)
         .config("spark.executor.extraJavaOptions",
-          graft.LocalClusterEnv.executorAddOpens)
+          graft.LocalClusterEnv.executorJavaOptions)
     val spark = b2.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

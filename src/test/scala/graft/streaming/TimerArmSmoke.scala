@@ -13,7 +13,7 @@ import scala.jdk.CollectionConverters._
 
 /** `KeyFlowTws`'s idle timer: armed once per key, re-armed lazily. Forked by
   * KeyFlowTwsStateSpec, because timer batches do not plan under sbt's test threads
-  * (see TimerSmoke). No-data microbatches are off, so batch `i` is the
+  * (see Parity). No-data microbatches are off, so batch `i` is the
   * `i`-th `addData`.
   *
   * Usage: `TimerArmSmoke count|jump <dir>`; exits 0 on a pass.

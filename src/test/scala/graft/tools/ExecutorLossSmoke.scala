@@ -62,7 +62,7 @@ object ExecutorLossSmoke {
       .config("spark.executor.extraClassPath",
         graft.LocalClusterEnv.absoluteClasspath)
       .config("spark.executor.extraJavaOptions",
-        graft.LocalClusterEnv.executorAddOpens)
+        graft.LocalClusterEnv.executorJavaOptions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -83,7 +83,7 @@ object Footprint {
         .config("spark.executor.extraClassPath",
           graft.LocalClusterEnv.absoluteClasspath)
         .config("spark.executor.extraJavaOptions",
-          graft.LocalClusterEnv.executorAddOpens)
+          graft.LocalClusterEnv.executorJavaOptions)
       ).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // r14 (judge #1): the runtime plan sweep runs here too — the x30/x90

@@ -49,8 +49,6 @@ import org.apache.spark.sql.SparkSession
   */
 object LocalClusterParity {
 
-  private def executorAddOpens: String = graft.LocalClusterEnv.executorAddOpens
-
   private def fmtDouble(d: Double): String =
     if (d.isNaN) "NaN"
     else if (d.isInfinite) d.toString
@@ -117,7 +115,7 @@ object LocalClusterParity {
         .config("spark.executor.memory", "3g")
         .config("spark.executor.extraClassPath",
           graft.LocalClusterEnv.absoluteClasspath)
-        .config("spark.executor.extraJavaOptions", executorAddOpens)
+        .config("spark.executor.extraJavaOptions", graft.LocalClusterEnv.executorJavaOptions)
     val spark = b2.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     var executors = 0

@@ -26,7 +26,8 @@ Steps (in order):
   merge       merge_sweeps.py over the five scale artifacts
   parity      LocalClusterParity full set (2 executor JVMs)
   execloss    ExecutorLossSmoke sf0.1 q_minhash_lsh (exit 2 = void -> WARN)
-  streamkill  LocalClusterStreamSmoke midbatch (in-flight kill leg)
+  streamkill  LocalClusterStreamSmoke midbatch (in-flight kill leg; a
+              test-scope main, run from TEST_CLASSES: Test/compile first)
   bench       final sf0.1 Bench (idle, sweep OFF - the timed basis)
               -> warm_history record
 
