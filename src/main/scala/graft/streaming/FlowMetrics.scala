@@ -48,7 +48,9 @@ final class FlowMetrics extends StreamingQueryListener {
 object EntityRegistry {
   import org.apache.spark.sql.{DataFrame, SparkSession}
 
-  /** All live keys + state for a checkpointed stateful operator. */
+  /** All live keys + state of a checkpointed keyed flow
+    * ([[KeyFlowTws.flow]]): its per-key `FlowState` variable. */
   def getAll(spark: SparkSession, checkpointDir: String): DataFrame =
-    spark.read.format("statestore").load(checkpointDir)
+    spark.read.format("statestore").option("stateVarName", KeyFlowTws.StateVar)
+      .load(checkpointDir)
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import graft.fold.{FoldOption, TickOption}
 import graft.model.Record
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
@@ -90,17 +89,8 @@ object KafkaFlowSpark {
           endingOffsets = Some(endingOffsets), extra = extra))
         .load())
 
-  /** records → keyed fold changelog (see [[KeyFlow.flow]]). */
-  def flow[S](
-      records: Dataset[Record],
-      fold: FoldOption[S, Record],
-      tick: TickOption[S] = TickOption.id[S],
-      config: KeyFlowConfig = KeyFlowConfig())(
-      implicit stateEnc: Encoder[FlowState[S]],
-      outEnc: Encoder[KeyOutput[S]]): Dataset[KeyOutput[S]] =
-    KeyFlow.flow(records, fold, tick, config)
-
-  /** Start the flow against a sink, checkpointed. The trigger interval is
+  /** Start a keyed fold's changelog ([[KeyFlowTws.flow]]) against a sink,
+    * checkpointed. The trigger interval is
     * the analogue of the reference's timer-scan cadence (1 s default,
     * PartitionFlowConfig.scala:52-58): timeouts fire even on empty batches.
     */

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.fold.{FoldOption, TickOption}
 import graft.model.{Record, Snapshot}
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import scala.concurrent.duration.Duration
 
@@ -28,7 +27,7 @@ import scala.concurrent.duration.Duration
   *    QUERY WATERMARK passes the key's last event time + `maxIdle`, with no
   *    new records required for that key. Watermark mode requires the caller
   *    to declare a watermark on the input (`records.withWatermark(
-  *    "timestamp", ...)` before [[KeyFlow.flow]]/[[KeyFlowTws.flow]]).
+  *    "timestamp", ...)` before [[KeyFlowTws.flow]]).
   *  - `maxOffsetDifference` (offset-domain timers) has no Spark clock; the
   *    engine attaches a per-input-partition max-offset "clock" to each
   *    batch (KeyFlow.withPartitionClock) and evicts keys whose held offset
@@ -62,8 +61,7 @@ final case class KeyFlowConfig(
       * (CassandraKeys.scala:146,204-208) INSIDE the engine, complementing
       * the read-time TTL of [[graft.state.ExternalSnapshots]]. Unlike
       * `maxIdle` no tick runs and no tombstone is emitted — the state
-      * just ages out. Processing-time domain only; ignored by the classic
-      * flatMapGroupsWithState engine (no state-TTL support there). */
+      * just ages out. Processing-time domain only. */
     stateTtl: Option[Duration] = None,
     /** USER-FACING OFFSET-DOMAIN TIMER (T9 — reference
       * timer/KafkaTimer.scala:16-45 `KafkaTimer.Offset` +
@@ -79,7 +77,7 @@ final case class KeyFlowConfig(
       * §7.4): the partition clock is observed when the key receives
       * records, so a key with no traffic ticks on its next record —
       * the reference's poll-driven clock has the same data-driven
-      * granularity per partition. transformWithState engine only. */
+      * granularity per partition. */
     tickEveryOffsets: Option[Long] = None) {
   /** Grouping key: the reference namespaces state by (topic, key) so equal
     * keys on different topics never share state (KafkaKey.scala:6-11);
@@ -96,9 +94,8 @@ final case class KeyFlowConfig(
   * `processedAtMs` is the key's timer BASIS in the configured
   * [[TimerDomain]]: wall-clock ms of the last touch (Clock) or the max
   * event-time ms folded so far (Watermark). The key's deadline is
-  * `processedAtMs + maxIdle`: [[KeyFlow]] sets its timeout there, and
-  * [[KeyFlowTws]] keeps one timer at or before it, re-armed at the
-  * deadline when it fires early. */
+  * `processedAtMs + maxIdle`: [[KeyFlowProcessor]] keeps one timer at or
+  * before it, re-armed at the deadline when it fires early. */
 final case class FlowState[S](
     snapshot: Snapshot[S],
     processedAtMs: Long,
@@ -112,34 +109,46 @@ final case class KeyOutput[S](
     state: Option[S],
     tombstone: Boolean)
 
-/** The per-key unit of computation (reference core/.../KeyFlow.scala:15-89,
-  * FoldToState.scala:39-91, TickToState.scala:32-49) re-expressed as a
-  * `flatMapGroupsWithState` update function:
+/** The pieces shared by the keyed-fold entry points. The per-key unit of
+  * computation itself (reference core/.../KeyFlow.scala:15-89,
+  * FoldToState.scala:39-91, TickToState.scala:32-49) is [[KeyFlowProcessor]],
+  * run by [[KeyFlowTws.flow]]; this object holds the record envelope with
+  * its partition offset clock, the clock pass and its spill, and the
+  * session defaults the flows install.
   *
-  *  - records fold in offset order with the snapshot-offset dedup guard, so
-  *    replaying a microbatch after failure is idempotent;
-  *  - a fold returning None mid-batch deletes-then-may-revive; only the
-  *    END-of-batch None removes durable state (reference
-  *    FoldToState.scala:62-88 defers deletion to batch end);
-  *  - on processing-time timeout the tick runs (reference Tick, O11);
-  *    None — or `removeOnIdle` — removes the key.
+  * Checkpoint compatibility: a checkpoint written by the former
+  * `KeyFlow.flow` engine (Spark's first-generation arbitrary stateful
+  * operator) does not resume on [[KeyFlowTws.flow]]: the operator and its
+  * state layout differ. Migrate through [[KeyFlowTws.flowWithInitialState]]
+  * seeded from [[graft.state.ExternalSnapshots]].
   */
 object KeyFlow {
   /** Spark's conf that makes a RocksDB state store commit a changelog per
     * microbatch instead of a snapshot upload. */
   val ChangelogConfKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
+  /** Spark's conf naming the state-store provider; transformWithState
+    * needs one with multiple column families, which Spark's default
+    * HDFS-backed provider lacks. */
+  val ProviderConfKey = "spark.sql.streaming.stateStore.providerClass"
+
   /** Set the engine's streaming defaults on the session, each only where
-    * the session has no value for it, so a user's explicit setting wins:
-    * [[LocalCheckpointFileManager]] as the checkpoint file manager, and
-    * changelog checkpointing for RocksDB state. Called by the flow entry
-    * points, before the caller's `start()`; it applies to every streaming
-    * query the session starts afterwards. */
-  private[streaming] def installSessionDefaults(spark: SparkSession): Unit =
-    Seq(LocalCheckpointFileManager.ConfKey -> classOf[LocalCheckpointFileManager].getName,
+    * the session has not set it, so a user's explicit setting wins:
+    * RocksDB as the state-store provider, [[LocalCheckpointFileManager]]
+    * as the checkpoint file manager, and changelog checkpointing for
+    * RocksDB state. "Set" means present in the session's own settings
+    * (`conf.getAll`): `conf.getOption` also returns a registered default,
+    * as it does for the provider. Called by the flow entry points, before
+    * the caller's `start()`; it applies to every streaming query the
+    * session starts afterwards. */
+  private[streaming] def installSessionDefaults(spark: SparkSession): Unit = {
+    val set = spark.conf.getAll
+    Seq(ProviderConfKey -> "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        LocalCheckpointFileManager.ConfKey -> classOf[LocalCheckpointFileManager].getName,
         ChangelogConfKey -> "true").foreach { case (k, v) =>
-      if (spark.conf.getOption(k).isEmpty) spark.conf.set(k, v)
+      if (!set.contains(k)) spark.conf.set(k, v)
     }
+  }
 
   /** Record plus the max offset observed in its OWN source
     * (topic, partition) this batch — the emulated partition-wide offset
@@ -364,138 +373,12 @@ object KeyFlow {
     }
   }
 
-  def update[S](
-      fold: FoldOption[S, Record],
-      tick: TickOption[S],
-      config: KeyFlowConfig)(
-      key: String,
-      records: Iterator[RecordEnv],
-      state: GroupState[FlowState[S]]): Iterator[KeyOutput[S]] = {
-
-    // Re-arm the maxIdle timer in the configured domain. Watermark mode
-    // clamps the basis to the current watermark so a re-registration after
-    // a tick (basis already passed) lands strictly in the future — Spark
-    // rejects event-time timeouts at or before the watermark.
-    def setTimeout(basisMs: Long): Unit =
-      config.maxIdle.foreach { d =>
-        config.timerDomain match {
-          case TimerDomain.Clock => state.setTimeoutDuration(d.toMillis)
-          case TimerDomain.Watermark =>
-            try state.setTimeoutTimestamp(
-              math.max(basisMs, state.getCurrentWatermarkMs()) + d.toMillis)
-            catch {
-              // batch execution has no watermark and never fires timers;
-              // event-time expiry still happens via the retroactive path,
-              // so skipping the (unfireable) registration is exact
-              case _: UnsupportedOperationException => ()
-            }
-        }
-      }
-
-    if (state.hasTimedOut) {
-      val prev = state.getOption
-      val ticked = tick.run(prev.map(_.snapshot.value))
-      val remove = config.removeOnIdle || ticked.isEmpty
-      if (remove) {
-        state.remove()
-        Iterator.single(KeyOutput[S](key, prev.map(_.snapshot.offset).getOrElse(-1L), None, tombstone = true))
-      } else {
-        val st = prev.get
-        // watermark domain: the basis advances with the re-armed timer
-        // (max(basis, wm) — the same instant setTimeout arms from), so
-        // the retroactive-expiry check cannot re-tick the SAME gap when a
-        // record arrives later (mirrors KeyFlowProcessor's expiry basis)
-        val newBasis = config.timerDomain match {
-          case TimerDomain.Watermark =>
-            math.max(st.processedAtMs, state.getCurrentWatermarkMs())
-          case TimerDomain.Clock => st.processedAtMs
-        }
-        state.update(st.copy(
-          snapshot = st.snapshot.copy(value = ticked.get), processedAtMs = newBasis))
-        setTimeout(newBasis)
-        Iterator.single(KeyOutput[S](key, st.snapshot.offset, ticked, tombstone = false))
-      }
-    } else {
-      // Offset order within the batch: the shuffle does not preserve Kafka
-      // partition order, so sort the key's batch (bounded by per-key batch
-      // volume — the reference materializes the same NonEmptyList per poll,
-      // PartitionFlow.scala:160-176).
-      val sorted = records.toArray.sortBy(_.record.offset)
-      if (sorted.isEmpty) {
-        setTimeout(state.getOption.map(_.processedAtMs).getOrElse(Long.MinValue))
-        Iterator.empty
-      } else {
-        val prev = state.getOption
-        var snapOffset = prev.map(_.snapshot.offset).getOrElse(Long.MinValue)
-        var current: Option[S] = prev.map(_.snapshot.value)
-        val maxSeen = math.max(
-          prev.map(_.maxPartitionOffset).getOrElse(Long.MinValue),
-          sorted.iterator.map(_.partitionMaxOffset).max)
-        // Watermark domain: retroactive expiry — see the twin comment in
-        // KeyFlowProcessor.handleInputRows. A record arriving event-time-
-        // idle (ts - basis > maxIdle) fires the pending timer BEFORE it
-        // folds, making event-time expiry batch-boundary-independent.
-        val retro = scala.collection.mutable.ArrayBuffer.empty[KeyOutput[S]]
-        val retroGapMs: Long = config.timerDomain match {
-          case TimerDomain.Watermark if config.maxIdle.isDefined => config.maxIdle.get.toMillis
-          case _ => Long.MaxValue
-        }
-        var eventBasis = prev.map(_.processedAtMs).getOrElse(Long.MinValue)
-        sorted.foreach { e =>
-          if (e.record.offset > snapOffset) { // replay dedup guard (P9)
-            // null-timestamp records are TIMELESS: they fold (offset order
-            // is the only folding contract — the spill codec and journal
-            // accept null timestamps), but they can neither fire a
-            // retroactive expiry (an unguarded MinValue ts would UNDERFLOW
-            // ts - basis into a spurious huge positive) nor advance the
-            // event-time basis
-            val ts = if (e.record.timestamp == null) Long.MinValue
-              else e.record.timestamp.getTime
-            if (ts != Long.MinValue && current.isDefined &&
-                eventBasis != Long.MinValue && ts - eventBasis > retroGapMs) {
-              val ticked = tick.run(current)
-              if (config.removeOnIdle || ticked.isEmpty) {
-                // closing state first, then tombstone — see the twin
-                // comment in KeyFlowProcessor.handleInputRows
-                retro += KeyOutput[S](key, snapOffset, current, tombstone = false)
-                retro += KeyOutput[S](key, snapOffset, None, tombstone = true)
-                current = None
-              } else {
-                // the timer path emits the ticked state — the retroactive
-                // path must too, or the changelog depends on batching
-                retro += KeyOutput[S](key, snapOffset, ticked, tombstone = false)
-                current = ticked
-              }
-            }
-            current = fold.run(current, e.record)
-            snapOffset = e.record.offset
-            if (ts > eventBasis) eventBasis = ts
-          }
-        }
-        val lagged = config.maxOffsetDifference.exists(d => maxSeen - snapOffset > d)
-        current match {
-          case Some(s) if !lagged =>
-            val basis = config.timerDomain match {
-              case TimerDomain.Clock => state.getCurrentProcessingTimeMs()
-              case TimerDomain.Watermark => eventBasis
-            }
-            state.update(FlowState(Snapshot(snapOffset, "", s), basis, maxSeen))
-            setTimeout(basis)
-            retro.iterator ++ Iterator.single(KeyOutput(key, snapOffset, Some(s), tombstone = false))
-          case _ =>
-            if (state.exists) state.remove()
-            retro.iterator ++ Iterator.single(KeyOutput[S](key, snapOffset, None, tombstone = true))
-        }
-      }
-    }
-  }
-
-  /** Run an [[graft.fold.EnhancedFold]]: the fold receives framework
-    * callbacks (reference EnhancedFold.scala:20-48). The extras instance is
-    * task-local; its persist-request counter is observability only —
-    * persistence itself is per-microbatch and atomic (stronger than the
-    * reference's additional-persist, which exists to shrink the replay
-    * window between periodic flushes). */
+  /** Run an [[graft.fold.EnhancedFold]] through [[KeyFlowTws.flow]]: the
+    * fold receives framework callbacks (reference EnhancedFold.scala:20-48).
+    * The extras instance is task-local; its persist-request counter is
+    * observability only — persistence itself is per-microbatch and atomic
+    * (stronger than the reference's additional-persist, which exists to
+    * shrink the replay window between periodic flushes). */
   def flowEnhanced[S](
       records: Dataset[Record],
       efold: graft.fold.EnhancedFold[S, Record],
@@ -504,59 +387,6 @@ object KeyFlow {
       implicit stateEnc: Encoder[FlowState[S]],
       outEnc: Encoder[KeyOutput[S]]): Dataset[KeyOutput[S]] = {
     val extras = new graft.fold.KeyFlowExtras
-    flow(records, FoldOption[S, Record]((s, a) => efold.run(extras, s, a)), tick, config)
-  }
-
-  /** Declarative entry: keyed stateful fold over a (possibly streaming)
-    * Dataset[Record]. Null-key records are dropped (reference
-    * PartitionFlow.scala:160-164). Installs the session defaults of
-    * [[installSessionDefaults]]. */
-  def flow[S](
-      records: Dataset[Record],
-      fold: FoldOption[S, Record],
-      tick: TickOption[S] = TickOption.id[S],
-      config: KeyFlowConfig = KeyFlowConfig())(
-      implicit stateEnc: Encoder[FlowState[S]],
-      outEnc: Encoder[KeyOutput[S]]): Dataset[KeyOutput[S]] = {
-    import records.sparkSession.implicits._
-    installSessionDefaults(records.sparkSession)
-    val timeout = (config.maxIdle, config.timerDomain) match {
-      case (None, _) => GroupStateTimeout.NoTimeout()
-      case (Some(_), TimerDomain.Clock) => GroupStateTimeout.ProcessingTimeTimeout()
-      case (Some(_), TimerDomain.Watermark) => GroupStateTimeout.EventTimeTimeout()
-    }
-    val keyed = records.filter((r: Record) => r.key != null)
-    config.timerDomain match {
-      case TimerDomain.Watermark =>
-        // flatMapGroupsWithState's analyzer requires the caller's
-        // watermarked TOP-LEVEL event-time column on its child, and a typed
-        // map re-serializes (strips the metadata) while re-declaring the
-        // watermark post-map is "redefining" (disallowed). So in watermark
-        // mode the keyed stream is grouped DIRECTLY — typed filter
-        // preserves the watermark column — and records wrap into RecordEnv
-        // inside the update function. The offset clock needs that map, so
-        // watermark + maxOffsetDifference lives in the transformWithState
-        // engine ([[KeyFlowTws.flow]]), whose analyzer check is
-        // plan-global.
-        require(config.maxOffsetDifference.isEmpty,
-          "TimerDomain.Watermark with maxOffsetDifference requires the " +
-            "transformWithState engine: use KeyFlowTws.flow")
-        keyed
-          .groupByKey((r: Record) => config.keyOf(r))
-          .flatMapGroupsWithState[FlowState[S], KeyOutput[S]](
-            OutputMode.Update(), timeout) { (key, rs, st) =>
-            update(fold, tick, config)(
-              key, rs.map(RecordEnv(_, Long.MinValue)), st)
-          }
-      case TimerDomain.Clock =>
-        // the partition-clock pass is only paid when offset-lag unload is on
-        val enriched =
-          if (config.maxOffsetDifference.isDefined) withPartitionClock(keyed)
-          else keyed.map(r => RecordEnv(r, Long.MinValue))
-        enriched
-          .groupByKey((e: RecordEnv) => config.keyOf(e.record))
-          .flatMapGroupsWithState[FlowState[S], KeyOutput[S]](
-            OutputMode.Update(), timeout)(update(fold, tick, config))
-    }
+    KeyFlowTws.flow(records, FoldOption[S, Record]((s, a) => efold.run(extras, s, a)), tick, config)
   }
 }

@@ -6,14 +6,24 @@ import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.streaming._
 
 /** The per-key engine on `transformWithState` (Spark 4.x arbitrary stateful
-  * processing v2) — the preferred runtime (SURVEY.md §7.1 step 4): named
-  * timers match the reference's per-key `Set[Instant]` wakeups
+  * processing v2; SURVEY.md §7.1 step 4), the one keyed fold every flow
+  * runs: named timers match the reference's per-key `Set[Instant]` wakeups
   * (reference timer/Timers.scala:12-66), state lives in the RocksDB state
-  * store, and the processor carries the same fold/tick/offset-dedup
-  * semantics as [[KeyFlow]].
+  * store, and this processor holds the fold, the tick, the snapshot-offset
+  * replay guard, retroactive event-time expiry and offset-lag eviction:
   *
-  * Requires `spark.sql.streaming.stateStore.providerClass =
-  * org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`.
+  *  - records fold in offset order with the snapshot-offset dedup guard, so
+  *    replaying a microbatch after failure is idempotent;
+  *  - a fold returning None mid-batch deletes-then-may-revive; only the
+  *    END-of-batch None removes durable state (reference
+  *    FoldToState.scala:62-88 defers deletion to batch end);
+  *  - on the `maxIdle` timer the tick runs (reference Tick, O11); None —
+  *    or `removeOnIdle` — removes the key.
+  *
+  * The flow entry points make RocksDB the session's
+  * `spark.sql.streaming.stateStore.providerClass` unless the session set
+  * one. A batch input runs with `TimeMode.None` and registers no timers;
+  * watermark-domain expiry then happens on the retroactive path alone.
   *
   * Commit mode: the flow entry points turn on RocksDB changelog
   * checkpointing, so a microbatch commits one changelog file per store
@@ -49,12 +59,16 @@ class KeyFlowProcessor[S](
   // offset tick re-armed at — separate state cell so FlowState's wire
   // format (and the external snapshot format) is untouched
   @transient private var offsetBasis: ValueState[Long] = _
+  // the `maxIdle` timer, when the query can fire timers (not in batch)
+  @transient private var idleTimer: Option[scala.concurrent.duration.Duration] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    val ttl = config.stateTtl
+    val timed = timeMode != TimeMode.None()
+    idleTimer = if (timed) config.maxIdle else None
+    val ttl = config.stateTtl.filter(_ => timed)
       .map(d => new TTLConfig(java.time.Duration.ofMillis(d.toMillis)))
       .getOrElse(TTLConfig.NONE)
-    state = getHandle.getValueState[FlowState[S]]("flowState", stateEnc, ttl)
+    state = getHandle.getValueState[FlowState[S]](KeyFlowTws.StateVar, stateEnc, ttl)
     // the basis ages out WITH the flow state: a TTL-expired key must not
     // leave a basis cell behind (unbounded residue) nor have a stale basis
     // greet its next incarnation
@@ -80,7 +94,7 @@ class KeyFlowProcessor[S](
       case TimerDomain.Watermark => initial.processedAtMs
     }
     state.update(initial.copy(processedAtMs = now))
-    config.maxIdle.foreach(d => getHandle.registerTimer(now + d.toMillis))
+    idleTimer.foreach(d => getHandle.registerTimer(now + d.toMillis))
     // arm the offset timer from the seeded snapshot offset: the recovered
     // key's next window starts where the previous job's fold left off
     config.tickEveryOffsets.foreach(_ => offsetBasis.update(initial.snapshot.offset))
@@ -117,8 +131,8 @@ class KeyFlowProcessor[S](
       if (e.record.offset > snapOffset) { // replay dedup guard (P9)
         if (firstFolded == Long.MinValue) firstFolded = e.record.offset
         // null-timestamp records are TIMELESS — fold but never expire or
-        // advance the basis (twin of KeyFlow.update's guard: an unguarded
-        // MinValue ts would underflow the gap check into a spurious fire)
+        // advance the basis (an unguarded MinValue ts would underflow the
+        // gap check into a spurious fire)
         val ts = if (e.record.timestamp == null) Long.MinValue
           else e.record.timestamp.getTime
         if (ts != Long.MinValue && current.isDefined &&
@@ -186,12 +200,12 @@ class KeyFlowProcessor[S](
         // a live key keeps the timer it was given with its first state:
         // moving the deadline forward moves processedAtMs only, and the
         // timer re-arms itself at the deadline when it fires early
-        if (prev.isEmpty) config.maxIdle.foreach(d => getHandle.registerTimer(now + d.toMillis))
+        if (prev.isEmpty) idleTimer.foreach(d => getHandle.registerTimer(now + d.toMillis))
         retro.iterator ++ Iterator.single(KeyOutput(key, snapOffset, Some(s), tombstone = false))
       case _ =>
         // removed keys must not leave a pending timer; the timer sits at
         // or before the deadline, so it is found by listing, not computed
-        if (prev.isDefined && config.maxIdle.isDefined)
+        if (prev.isDefined && idleTimer.isDefined)
           getHandle.listTimers().toList.foreach(getHandle.deleteTimer)
         state.clear()
         if (config.tickEveryOffsets.isDefined) offsetBasis.clear()
@@ -225,10 +239,9 @@ class KeyFlowProcessor[S](
         Iterator.single(KeyOutput[S](key, st.snapshot.offset, None, tombstone = true))
       } else {
         // the new basis is the current time in the timer's domain, not the
-        // deadline (mirroring the classic engine's timed-out branch): when
-        // the watermark jumped more than maxIdle past the deadline,
-        // re-arming at deadline + maxIdle would land at or below the
-        // watermark and fire again next microbatch — one spurious tick per
+        // deadline: when the watermark jumped more than maxIdle past the
+        // deadline, re-arming at deadline + maxIdle would land at or below
+        // the watermark and fire again next microbatch — one spurious tick per
         // maxIdle of event-time gap. This way a long gap ticks exactly
         // once, matching the retroactive path in handleInputRows.
         state.update(st.copy(
@@ -241,14 +254,18 @@ class KeyFlowProcessor[S](
 }
 
 object KeyFlowTws {
+  /** The name of the per-key [[FlowState]] variable in the state store. */
+  val StateVar = "flowState"
 
-  /** Keyed stateful fold with timers via transformWithState. The `maxIdle`
-    * timer runs in `config.timerDomain`: processing time, or event time
-    * (fires when the query watermark passes the key's last event time +
-    * maxIdle — declare a watermark on `records` first, e.g.
-    * `records.withWatermark("timestamp", "0 seconds")`). Null-key records
-    * are dropped (reference PartitionFlow.scala:160-164). Installs the
-    * session defaults of [[KeyFlow.installSessionDefaults]]: changelog
+  /** Keyed stateful fold with timers via transformWithState, over a
+    * streaming or a batch Dataset[Record]. The `maxIdle` timer runs in
+    * `config.timerDomain`: processing time, or event time (fires when the
+    * query watermark passes the key's last event time + maxIdle — declare
+    * a watermark on a streaming `records` first, e.g.
+    * `records.withWatermark("timestamp", "0 seconds")`). A batch input
+    * fires no timers. Null-key records are dropped (reference
+    * PartitionFlow.scala:160-164). Installs the session defaults of
+    * [[KeyFlow.installSessionDefaults]]: the RocksDB provider, changelog
     * commits and [[LocalCheckpointFileManager]]. */
   def flow[S](
       records: Dataset[Record],
@@ -269,7 +286,8 @@ object KeyFlowTws {
     * drop, partition-clock enrichment, and keying. ONE body because the
     * guard and the TimeMode match are safety-critical — a new
     * TimerDomain handled in one entry point but not the other would be
-    * a silent divergence. */
+    * a silent divergence. A batch input gets `TimeMode.None`: Spark has
+    * no time values for a batch query in the other modes. */
   private def prepare(records: Dataset[Record], config: KeyFlowConfig)
       : (TimeMode, org.apache.spark.sql.KeyValueGroupedDataset[String, KeyFlow.RecordEnv]) = {
     import records.sparkSession.implicits._
@@ -277,6 +295,7 @@ object KeyFlowTws {
     require(config.stateTtl.isEmpty || config.timerDomain == TimerDomain.Clock,
       "stateTtl is processing-time-domain only (TWS TTL requires TimeMode.ProcessingTime)")
     val timeMode = (config.maxIdle, config.timerDomain) match {
+      case _ if !records.isStreaming => TimeMode.None()
       case (None, _) if config.stateTtl.isDefined => TimeMode.ProcessingTime()
       case (None, _) => TimeMode.None()
       case (Some(_), TimerDomain.Clock) => TimeMode.ProcessingTime()

@@ -8,13 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   @transient lazy val spark: SparkSession = SparkTestBase.session
 
-  /** Fork a smoke `main` in a fresh JVM and return its exit code. Spark
-    * 4.1's stateful exec nodes NPE (PythonSQLMetrics / null session) when
-    * timer batches are planned under the sbt test harness's thread
-    * context; the engine is fine in a plain JVM, so stateful checks run
-    * through this: the stream/batch parity groups (one child per group,
-    * see `graft.streaming.Parity`) and the smokes that need a JVM of their
-    * own (ExtensionsSmoke, the local-cluster and broker smokes). */
+  /** Fork a smoke `main` in a fresh JVM and return its exit code. Used by
+    * the stream/batch parity groups (one child per group, see
+    * `graft.streaming.Parity`) and the smokes that need a JVM of their own
+    * (ExtensionsSmoke, the local-cluster and broker smokes). A child has
+    * its own session, temp dir and exit code, so a case that hangs, halts
+    * or leaves a query running cannot take the test JVM with it. */
   def forkSmoke(mainClass: String): Int = forkSmoke(mainClass, Nil)
 
   /** [[forkSmoke]] with extra classpath entries appended to the child JVM
@@ -84,6 +83,10 @@ object SparkTestBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the keyed fold's provider, set here so no spec's state store
+      // depends on which spec first ran a flow
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -26,7 +26,7 @@ class ExternalPersistenceE2ESpec extends SparkTestBase {
     val ckpt = tempDir("ext-ckpt").toString
     val countFold = FoldOption.of[Long, Record](_ => 1L)((n, _) => n + 1)
     val input = MemoryStream[Record]
-    val out = KeyFlow.flow(input.toDS(), countFold)
+    val out = KeyFlowTws.flow(input.toDS(), countFold)
 
     def start() = out.writeStream
       .outputMode("update").option("checkpointLocation", ckpt)
@@ -82,7 +82,7 @@ class ExternalPersistenceE2ESpec extends SparkTestBase {
       val ckpt = tempDir("ext-ckpt-fi").toString
       val countFold = FoldOption.of[Long, Record](_ => 1L)((n, _) => n + 1)
       val input = MemoryStream[Record]
-      val out = KeyFlow.flow(input.toDS(), countFold)
+      val out = KeyFlowTws.flow(input.toDS(), countFold)
       @volatile var armed = failBatchWithOffset3
 
       def start() = out.writeStream

@@ -25,7 +25,7 @@ class FlowMetricsSpec extends SparkTestBase {
       val foldMetrics = FoldMetrics(spark, "count")
       val fold = foldMetrics.decorate(
         FoldOption.of[Long, Record](_ => 1L)((n, _) => n + 1))
-      val out = KeyFlow.flow(preprocessed, fold)
+      val out = KeyFlowTws.flow(preprocessed, fold)
       val ckpt = tempDir("graft-ckpt").toString
       val q = out.writeStream.format("memory").queryName("metrics")
         .outputMode("update").option("checkpointLocation", ckpt).start()

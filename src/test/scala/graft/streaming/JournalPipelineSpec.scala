@@ -52,7 +52,7 @@ class JournalPipelineSpec extends SparkTestBase {
     val balanceFold = FoldOption.of[Long, Record] { r =>
       new String(r.value, "UTF-8").toLong
     } { (bal, r) => bal + new String(r.value, "UTF-8").toLong }
-    val out = KeyFlow.flow(events, balanceFold)
+    val out = KeyFlowTws.flow(events, balanceFold)
 
     def start() = out.writeStream
       .outputMode("update").option("checkpointLocation", ckpt)

@@ -22,8 +22,8 @@ import java.sql.Timestamp
   *
   * Sum-fold over per-record payload values (exact integers) so any dropped,
   * duplicated, or reordered record changes the answer. Exits 0 iff the
-  * per-key final states match exactly. Forked by ExternalJournalSpec
-  * (Spark 4.1 stateful exec NPEs under the sbt harness — see Parity).
+  * per-key final states match exactly. Forked by ExternalSnapshotsSpec (see
+  * SparkTestBase.forkSmoke).
   */
 object JournalStreamSmoke {
   def main(args: Array[String]): Unit = {

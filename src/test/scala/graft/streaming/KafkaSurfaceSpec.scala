@@ -22,7 +22,7 @@ import java.sql.Timestamp
   *     timestampType) — nulls, empty headers, non-UTF-8 bytes;
   *  3. the reference's golden produce → fold → stop → produce more →
   *     restart-from-checkpoint → continue pattern, with the Kafka-schema
-  *     stream feeding `decodeKafka` → `KeyFlow.flow` — i.e. the complete
+  *     stream feeding `decodeKafka` → `KeyFlowTws.flow` — i.e. the complete
   *     pipeline downstream of `.load()`;
   *  4. `fromKafka` itself executes to Spark's data-source resolver and
   *     fails ONLY on the missing connector artifact — documenting that the
@@ -94,7 +94,7 @@ class KafkaSurfaceSpec extends SparkTestBase {
     val input = MemoryStream[KRow]
     val records = KafkaFlowSpark.decodeKafka(input.toDF())
     val countFold = FoldOption.of[Long, Record](_ => 1L)((n, _) => n + 1)
-    val out = KafkaFlowSpark.flow(records, countFold)
+    val out = KeyFlowTws.flow(records, countFold)
     val ckpt = tempDir("kafka-schema-e2e").toString
     KafkaSurfaceSpec.golden.clear()
     def start() = out.writeStream

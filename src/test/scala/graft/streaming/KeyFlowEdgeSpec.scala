@@ -23,7 +23,7 @@ class KeyFlowEdgeSpec extends SparkTestBase {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[Record]
-    val out = KeyFlow.flow(input.toDS(), countFold,
+    val out = KeyFlowTws.flow(input.toDS(), countFold,
       config = KeyFlowConfig(namespaceByTopic = true))
     val q = out.writeStream.format("memory").queryName("ns")
       .outputMode("update")
@@ -49,7 +49,7 @@ class KeyFlowEdgeSpec extends SparkTestBase {
         Array[Byte](), Map.empty)
     val config = KeyFlowConfig(maxIdle = Some(6.hours), removeOnIdle = true,
       timerDomain = TimerDomain.Watermark)
-    val out = KeyFlow.flow(
+    val out = KeyFlowTws.flow(
       Seq(at(0, 0), at(1, 10), at(2, 20)).toDS(), countFold, config = config)
       .collect()
     val expected = Seq(
@@ -72,7 +72,7 @@ class KeyFlowEdgeSpec extends SparkTestBase {
     val config = KeyFlowConfig(maxIdle = Some(6.hours), removeOnIdle = false,
       timerDomain = TimerDomain.Watermark)
     val markTick = TickOption[Long](n => n.map(_ + 100L)) // visible transform
-    val out = KeyFlow.flow(
+    val out = KeyFlowTws.flow(
       Seq(at(0, 0), at(1, 10)).toDS(), countFold, markTick, config)
       .collect().map(o => (o.offset, o.state, o.tombstone)).toSeq.sortBy(_._1)
     // r1 proves the gap: tick fires retroactively (101 emitted), then r1
@@ -88,7 +88,7 @@ class KeyFlowEdgeSpec extends SparkTestBase {
     // coalesce(1): both topics share ONE Spark partition — under a
     // Spark-partition-wide clock, big-topic offsets (1e6) would make the
     // small-topic key look 999 998 offsets behind and wrongly tombstone it
-    val out = KeyFlow.flow(input.toDS().coalesce(1), countFold,
+    val out = KeyFlowTws.flow(input.toDS().coalesce(1), countFold,
       config = KeyFlowConfig(maxOffsetDifference = Some(100L)))
     val q = out.writeStream.format("memory").queryName("clk")
       .outputMode("update")
@@ -112,7 +112,7 @@ class KeyFlowEdgeSpec extends SparkTestBase {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[Record]
-    val out = KeyFlow.flow(input.toDS(), countFold)
+    val out = KeyFlowTws.flow(input.toDS(), countFold)
     val q = out.writeStream.format("memory").queryName("nullts")
       .outputMode("update")
       .option("checkpointLocation", tempDir("nullts").toString)
@@ -127,6 +127,22 @@ class KeyFlowEdgeSpec extends SparkTestBase {
     assert(fin.state == Some(3L) && fin.offset == 2L && !fin.tombstone)
   }
 
+  test("a flow makes RocksDB the session's state-store provider unless the session chose one") {
+    val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    val hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    val unset = spark.newSession()
+    unset.conf.unset(KeyFlow.ProviderConfKey)
+    // Spark's registered default reads back as a value, so "not chosen"
+    // cannot be told by getOption
+    assert(unset.conf.getOption(KeyFlow.ProviderConfKey).contains(hdfs))
+    KeyFlow.installSessionDefaults(unset)
+    assert(unset.conf.get(KeyFlow.ProviderConfKey) == rocks)
+    val chosen = spark.newSession()
+    chosen.conf.set(KeyFlow.ProviderConfKey, hdfs)
+    KeyFlow.installSessionDefaults(chosen)
+    assert(chosen.conf.get(KeyFlow.ProviderConfKey) == hdfs)
+  }
+
   test("poison records recover through handleErrorWith without killing the query") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
@@ -139,7 +155,7 @@ class KeyFlowEdgeSpec extends SparkTestBase {
       n + 1
     }
     val fold = risky.handleErrorWith((st, _) => st) // skip the poison record
-    val out = KeyFlow.flow(input.toDS(), fold)
+    val out = KeyFlowTws.flow(input.toDS(), fold)
     val q = out.writeStream.format("memory").queryName("poison")
       .outputMode("update")
       .option("checkpointLocation", tempDir("poison").toString)

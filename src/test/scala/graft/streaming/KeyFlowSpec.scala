@@ -40,7 +40,7 @@ class KeyFlowSpec extends ForkedParity {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[Record]
-    val out = KeyFlow.flow(input.toDS(), countFold)
+    val out = KeyFlowTws.flow(input.toDS(), countFold)
     val ckpt = tempDir("graft-ckpt").toString
     // memory sink refuses checkpoint recovery; foreachBatch supports it
     KeyFlowSpec.golden.clear()
@@ -75,7 +75,7 @@ class KeyFlowSpec extends ForkedParity {
       if (new String(r.value, "UTF-8") == "reset") None
       else Some(s.getOrElse(0L) + 1)
     }
-    val out = KeyFlow.flow(input.toDS(), fold)
+    val out = KeyFlowTws.flow(input.toDS(), fold)
     val ckpt = tempDir("graft-ckpt").toString
     val q = out.writeStream.format("memory").queryName("delrev")
       .outputMode("update").option("checkpointLocation", ckpt).start()
@@ -99,7 +99,7 @@ class KeyFlowSpec extends ForkedParity {
       if (new String(r.value, "UTF-8") == "reset") None
       else Some(s.getOrElse(0L) + 1)
     }
-    val out = KeyFlow.flow(input.toDS(), fold)
+    val out = KeyFlowTws.flow(input.toDS(), fold)
     val ckpt = tempDir("graft-ckpt").toString
     val q = out.writeStream.format("memory").queryName("intra")
       .outputMode("update").option("checkpointLocation", ckpt).start()
@@ -114,7 +114,7 @@ class KeyFlowSpec extends ForkedParity {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[Record]
-    val out = KeyFlow.flow(input.toDS(), countFold)
+    val out = KeyFlowTws.flow(input.toDS(), countFold)
     val ckpt = tempDir("graft-ckpt").toString
     val q = out.writeStream.format("memory").queryName("dedup")
       .outputMode("update").option("checkpointLocation", ckpt).start()
@@ -131,7 +131,7 @@ class KeyFlowSpec extends ForkedParity {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[Record]
-    val out = KeyFlow.flow(input.toDS(), countFold)
+    val out = KeyFlowTws.flow(input.toDS(), countFold)
     val ckpt = tempDir("graft-ckpt").toString
     val q = out.writeStream.format("memory").queryName("nullkey")
       .outputMode("update").option("checkpointLocation", ckpt).start()
@@ -169,7 +169,7 @@ class KeyFlowSpec extends ForkedParity {
     val input = MemoryStream[Record]
     val config = KeyFlowConfig(maxOffsetDifference = Some(10L))
     // single input partition so the emulated partition clock is shared
-    val out = KeyFlow.flow(input.toDS().repartition(1), countFold,
+    val out = KeyFlowTws.flow(input.toDS().repartition(1), countFold,
       graft.fold.TickOption.id[Long], config)
     val ckpt = tempDir("graft-ckpt").toString
     val q = out.writeStream.format("memory").queryName("offlag")

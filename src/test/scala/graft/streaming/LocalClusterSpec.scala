@@ -5,9 +5,8 @@ import graft.SparkTestBase
 /** Forks [[LocalClusterStreamSmoke]] — the multi-executor streaming parity
   * gate. Needs a real Spark distro for the cluster Worker to spawn
   * executor JVMs from; self-skips (green) when none is present, same
-  * discipline as KafkaBrokerSmoke. Forked for two reasons: the stateful
-  * exec NPEs under sbt's test threads (see SparkTestBase.forkSmoke), and
-  * the smoke builds its own sessions with non-test masters.
+  * discipline as KafkaBrokerSmoke. Forked because the smoke builds its
+  * own sessions with non-test masters.
   */
 class LocalClusterSpec extends SparkTestBase {
 

@@ -72,12 +72,12 @@ final class ParityCtx(val spark: SparkSession, dir: Path) {
 
 /** The parity harness. A group of [[ParityCase]]s runs in one child JVM
   * ([[main]]) on one `local[4]` context; each case gets a
-  * `spark.newSession()`. The child is forked, not run in the test JVM:
-  * Spark 4.1's stateful exec nodes read the classic active-session
-  * registry at construction and NPE (PythonSQLMetrics / null session)
-  * when timer batches are planned under sbt's test threads; in a plain
-  * JVM the engine is fine. [[ForkedParity]] registers the cases as
-  * tests.
+  * `spark.newSession()`. [[ForkedParity]] registers the cases as tests and
+  * forks the child (see `SparkTestBase.forkSmoke` for what the fork
+  * isolates). The cases do not need the fork to run: every `parity` and
+  * `timers` case also passed when run in the sbt test JVM on a
+  * `newSession()` of the test session, with and without an active
+  * session set (Spark 4.1.2).
   *
   * Usage: `Parity <group> <resultFile> [<name part>...]` runs the cases
   * of `group` (those whose name contains a given part, if any) and

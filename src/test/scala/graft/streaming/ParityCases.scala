@@ -22,9 +22,10 @@ import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 /** The `parity` group (SURVEY §7.5): each stateful query's streaming form —
-  * a replay of the sf0.001 tables through [[KeyFlowTws]] or [[KeyFlow]],
-  * mostly with an at-least-once replay overlap — must end in the same
-  * per-key state as its batch form. Run by StreamBatchParitySpec. */
+  * a replay of the sf0.001 tables through [[KeyFlowTws]] or a
+  * transformWithState processor of its own, mostly with an at-least-once
+  * replay overlap — must end in the same per-key state as its batch form.
+  * Run by StreamBatchParitySpec. */
 object ParityCases {
 
   /** ClusterParity's per-bucket state: distinct-member count and the member
@@ -101,7 +102,7 @@ object ParityCases {
 
   val all: Seq[ParityCase] = Seq(
 
-    // count + exact decimal sum of the payload, classic engine
+    // count + exact decimal sum of the payload
     ParityCase.replay("streaming fold over replayed events equals batch groupBy") { c =>
       import c.spark.implicits._
       val events = Tables(c.spark, c.data, "events")
@@ -117,7 +118,7 @@ object ParityCases {
         .collect()
         .map(r => r.getLong(0).toString -> ((r.getLong(1), BigDecimal(r.getDecimal(2)))))
         .toMap
-      Replay(split(events, 3, overlap = 50), (ds: Dataset[Record]) => KeyFlow.flow(ds, fold),
+      Replay(split(events, 3, overlap = 50), (ds: Dataset[Record]) => KeyFlowTws.flow(ds, fold),
         truth, identity[Map[String, (Long, BigDecimal)]])
     },
 
@@ -717,16 +718,28 @@ object ParityCases {
     // q_twap: state (first ms, last ms, last cents, area, n); each event
     // closes the previous value's interval. The integral is NOT
     // replay-idempotent: the overlap passes only through the P9 offset
-    // guard.
+    // guard. Besides the q_twap row, each user's integral itself must equal
+    // Σ lag(cents) · (ms − lag(ms)) over the feed's (ms, event_id) order:
+    // the integer area / dur alone hides an error smaller than dur.
     ParityCase.replay("online time-weighted average equals the batch q_twap row for row (forked)") { c =>
       import c.spark.implicits._
+      val cents = "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
+      val byTime = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
+        .orderBy("ms", "event_id")
+      val area = Tables(c.spark, c.data, "events")
+        .select(col("user_id"), col("event_id"), expr("ts div 1000000").as("ms"),
+          expr(cents).as("cents"))
+        .select(col("user_id"),
+          (lag("cents", 1).over(byTime) * (col("ms") - lag("ms", 1).over(byTime))).as("piece"))
+        .groupBy("user_id").agg(coalesce(sum("piece"), lit(0L)))
+        .collect().map(r => r.getLong(0).toString -> r.getLong(1)).toMap
       val truth = graft.SparkEntry.queries("q_twap")(c.spark, c.data)
         .collect().map { r =>
-          r.getLong(0).toString ->
-            ((r.getLong(1), r.getLong(2), if (r.isNullAt(3)) None else Some(r.getLong(3))))
+          val u = r.getLong(0).toString
+          u -> ((r.getLong(1), r.getLong(2), if (r.isNullAt(3)) None else Some(r.getLong(3)),
+            area.get(u)))
         }.toMap
-      val feed = timeOrdered(c, Seq("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))(
-        r => s"${r.getLong(2)}|${r.getLong(3)}")
+      val feed = timeOrdered(c, Seq(cents))(r => s"${r.getLong(2)}|${r.getLong(3)}")
       val step: ((Long, Long, Long, Long, Long), Record) => (Long, Long, Long, Long, Long) = {
         (st, r) =>
           val Array(ms, cents) = new String(r.value, "UTF-8").split('|').map(_.toLong)
@@ -741,7 +754,7 @@ object ParityCases {
         truth, (m: Map[String, (Long, Long, Long, Long, Long)]) =>
           m.map { case (u, (first, lastMs, _, area, n)) =>
             val dur = lastMs - first
-            u -> ((n, dur, if (dur == 0) None else Some(area / dur)))
+            u -> ((n, dur, if (dur == 0) None else Some(area / dur), Some(area)))
           })
     },
 
@@ -960,8 +973,8 @@ object ParityCases {
       diff(streamed, truth)
     },
 
-    // keep-last fold through the classic engine; the offset guard makes it
-    // max_by(event_id) even with old offsets replayed after new ones
+    // keep-last fold; the offset guard makes it max_by(event_id) even with
+    // old offsets replayed after new ones
     ParityCase.replay("streaming last-state (SnapshotFold semantics) equals batch max_by") { c =>
       import c.spark.implicits._
       val events = Tables(c.spark, c.data, "events")
@@ -973,7 +986,7 @@ object ParityCases {
         .groupBy("user_id").agg(expr("max_by(event_type, event_id)").as("t"))
         .collect().map(r => r.getLong(0).toString -> r.getString(1)).toMap
       Replay(Seq(hi.toSeq, lo.toSeq ++ hi.take(100).toSeq),
-        (ds: Dataset[Record]) => KeyFlow.flow(ds, last), truth, identity[Map[String, String]])
+        (ds: Dataset[Record]) => KeyFlowTws.flow(ds, last), truth, identity[Map[String, String]])
     })
 
   /** A key's changelog cut into segments: a tombstone at offset o closes

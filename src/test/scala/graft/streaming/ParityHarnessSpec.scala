@@ -11,7 +11,7 @@ object PlantedCases {
     import c.spark.implicits._
     val feed = (0 until 30).map(i => Parity.rec("t", i.toLong, "k" + (i % 3), ""))
     val countFold = FoldOption.of[Long, Record](_ => 1L)((n, _) => n + 1)
-    Replay(Parity.split(feed, 3, overlap = 4), (ds: Dataset[Record]) => KeyFlow.flow(ds, countFold),
+    Replay(Parity.split(feed, 3, overlap = 4), (ds: Dataset[Record]) => KeyFlowTws.flow(ds, countFold),
       Map("k0" -> (10L + truthOffBy), "k1" -> 10L, "k2" -> 10L), identity[Map[String, Long]])
   }
 

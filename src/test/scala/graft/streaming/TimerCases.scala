@@ -47,24 +47,23 @@ object TimerCases {
     // T1's watermark domain: a key idle in EVENT time is tombstoned when
     // the query watermark, advanced by OTHER keys, passes its last event
     // time + maxIdle. Key a at 10 s, then key b at 100 s: a's timer at 15 s
-    // fires in the no-data batch; b (timer 105 s) stays. Both engines, a
-    // restart between the two batches, and the no-double-tick regression.
+    // fires in the no-data batch; b (timer 105 s) stays. Also a restart
+    // between the two batches, and the no-double-tick regression.
     ParityCase("watermark-domain timer: advancing the watermark via another key " +
-        "expires an idle key in both engines (T1 watermark domain)") { c =>
+        "expires an idle key (T1 watermark domain)") { c =>
       import c.spark.implicits._
       import c.sqlContext
       val countFold = FoldOption.of[Long, Record](_ => 1L)((n, _) => n + 1)
       val config = KeyFlowConfig(maxIdle = Some(5.seconds), removeOnIdle = true,
         timerDomain = TimerDomain.Watermark)
-      type Flow = Dataset[Record] => Dataset[KeyOutput[Long]]
       def bIntact(rows: Array[KeyOutput[Long]]): Boolean =
         rows.exists(o => o.key == "b" && !o.tombstone) &&
           !rows.exists(o => o.key == "b" && o.tombstone)
 
-      def run(name: String)(mk: Flow): Seq[String] = {
+      def run(name: String): Seq[String] = {
         val input = MemoryStream[Record]
-        val q = c.memory(mk(input.toDS().withWatermark("timestamp", "0 seconds")), name,
-          every200ms)
+        val q = c.memory(KeyFlowTws.flow(input.toDS().withWatermark("timestamp", "0 seconds"),
+          countFold, TickOption.id[Long], config), name, every200ms)
         def rows = c.table[KeyOutput[Long]](name)
         input.addData(rec("t", 0, "a", "", eventMs = 10000L))
         // a's batch commits (state + its event-time timer at 15 s durable)
@@ -108,18 +107,16 @@ object TimerCases {
       // removeOnIdle=false, the event-time basis must advance with the
       // re-armed timer: a later record inside the NEW idle window folds
       // into the ticked state without re-ticking the same gap (102, not
-      // 202). On the TWS engine this guards the re-arm clamp in
-      // KeyFlowProcessor.handleExpiredTimer (basis = max(expiry,
-      // watermark)): without it a watermark jump > 2x maxIdle re-fires once
+      // 202). This guards the new basis in
+      // KeyFlowProcessor.handleExpiredTimer (the watermark, not the
+      // deadline): without it a watermark jump > 2x maxIdle re-fires once
       // per maxIdle of event-time gap.
-      def runNoDoubleTick(name: String)(
-          mk: (Dataset[Record], FoldOption[Long, Record], TickOption[Long], KeyFlowConfig) =>
-            Dataset[KeyOutput[Long]]): Seq[String] = {
+      def runNoDoubleTick(name: String): Seq[String] = {
         val input = MemoryStream[Record]
         val markTick = TickOption[Long](n => n.map(_ + 100L))
         val cfg = KeyFlowConfig(maxIdle = Some(5.seconds), removeOnIdle = false,
           timerDomain = TimerDomain.Watermark)
-        val q = c.memory(mk(input.toDS().withWatermark("timestamp", "0 seconds"),
+        val q = c.memory(KeyFlowTws.flow(input.toDS().withWatermark("timestamp", "0 seconds"),
           countFold, markTick, cfg), name, every200ms)
         def rows = c.table[KeyOutput[Long]](name)
         input.addData(rec("t", 0, "a", "", eventMs = 10000L))
@@ -135,11 +132,7 @@ object TimerCases {
         check(s"$name: folded after the tick" -> folded, s"$name: no double tick" -> noDouble)
       }
 
-      run("wmtws")(KeyFlowTws.flow(_, countFold, TickOption.id[Long], config)) ++
-        run("wmclassic")(KeyFlow.flow(_, countFold, TickOption.id[Long], config)) ++
-        runRestart("wmtwsrestart") ++
-        runNoDoubleTick("wmnodouble")(KeyFlow.flow(_, _, _, _)) ++
-        runNoDoubleTick("wmnodoubletws")(KeyFlowTws.flow(_, _, _, _))
+      run("wm") ++ runRestart("wmrestart") ++ runNoDoubleTick("wmnodouble")
     },
 
     // RecordExpiration inside the engine: with stateTtl = 1 s, state

@@ -33,13 +33,19 @@ Steps (in order):
 
 Timed steps (flush, stream, bench) assume an otherwise-idle host: this
 script runs everything serially, so that holds as long as nothing else
-runs beside it. Logs land in /tmp/closeout/<step>.log.
+runs beside it. Logs land in /tmp/closeout/<step>.log. Each step runs
+with a private temp dir (java.io.tmpdir of a java step, TMPDIR of any
+step), deleted when the step ends: an executor a step kills with kill -9
+never runs its exit hooks, and would leave the native libraries it
+unpacked in a shared /tmp.
 """
 import json
 import os
 import re
+import shutil
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 LOGDIR = "/tmp/closeout"
@@ -82,13 +88,19 @@ def sbt_cmd(task, env_extra=None):
 def run(step, cmd, env_extra, ok_codes=(0,), warn_codes=()):
     os.makedirs(LOGDIR, exist_ok=True)
     log = os.path.join(LOGDIR, f"{step}.log")
-    env = dict(os.environ, **env_extra)
+    tmp = tempfile.mkdtemp(prefix=f"closeout-{step}-")
+    env = dict(os.environ, TMPDIR=tmp, **env_extra)
+    if cmd[0] == "java":
+        cmd = [cmd[0], f"-Djava.io.tmpdir={tmp}"] + cmd[1:]
     print(f"==> {step}: {' '.join(cmd)}" +
           (f"  [env {' '.join(f'{k}={v}' for k, v in env_extra.items())}]"
            if env_extra else ""))
-    with open(log, "w") as f:
-        p = subprocess.run(cmd, cwd=REPO, env=env, stdout=f,
-                           stderr=subprocess.STDOUT)
+    try:
+        with open(log, "w") as f:
+            p = subprocess.run(cmd, cwd=REPO, env=env, stdout=f,
+                               stderr=subprocess.STDOUT)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     tail = open(log).read().splitlines()[-3:]
     for line in tail:
         print(f"    {line[:160]}")
@@ -101,13 +113,19 @@ def run(step, cmd, env_extra, ok_codes=(0,), warn_codes=()):
     return "ok", log
 
 
+# a WARN the ratchets ("WARN ...") or the smokes ("[execloss] WARN: ...")
+# print as their own; Spark's and Hadoop's log4j lines ("26/10/19
+# 17:45:08 WARN NativeCodeLoader: ...") are not adjudication items
+OWN_WARN = re.compile(r"(\[\w+\] )?WARN\b")
+
+
 def collect_warns(logs):
     warns = []
     for log in logs:
         if not os.path.exists(log):
             continue
         for line in open(log):
-            if line.startswith("WARN") or " WARN " in line[:30]:
+            if OWN_WARN.match(line):
                 warns.append(f"{os.path.basename(log)}: {line.strip()[:200]}")
     return warns
 
