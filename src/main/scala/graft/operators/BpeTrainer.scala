@@ -200,9 +200,6 @@ object BpeTrainer {
     * merges-per-job measurement. */
   @volatile var lastDistributedActions: Int = 0
 
-  /** Driver-side stop-reason tracing for the batched fallback (stderr). */
-  private def debug: Boolean = sys.env.get("GRAFT_BPE_DEBUG").contains("1")
-
   /** Speculation depth per round: how many merges one counting job tries
     * to confirm. Bounded driver work (the verify walk is over the
     * collected window) and bounded kernel work (each word replays at most
@@ -380,7 +377,6 @@ object BpeTrainer {
         zeroStreak += 1
         overflowRounds += 1
         spec = Nil
-        if (debug) System.err.println(s"[bpe] round $rounds: delta overflow, retrying base-only")
       } else if (baseRows.isEmpty) {
         // no pairs at all: flush pending and stop
         exhausted = true
@@ -421,15 +417,11 @@ object BpeTrainer {
           }
           if (amKey == null || amC <= horizon || consThreat) {
             walking = false
-            if (debug) System.err.println(
-              s"[bpe] verify stop at step $k: horizon/conservative guard (amC=$amC horizon=$horizon)")
           } else {
             val Array(a, b) = amKey.split(Sep, 2)
             if ((a, b) != specNow(k - 1)) {
               knownNext = Some((a, b))
               walking = false
-              if (debug) System.err.println(
-                s"[bpe] mis-speculation at step $k: true argmax ($a,$b) != ${specNow(k - 1)}")
             } else {
               confirmed += ((a, b, amC))
               val m = a + b
@@ -463,9 +455,6 @@ object BpeTrainer {
           mintedEver += (a + b)
           rank += 1
         }
-        if (debug) System.err.println(
-          s"[bpe] round $rounds: confirmed ${confirmed.size}/${specNow.length} " +
-            s"(pending ${pending.size}, horizon $horizon)")
 
         // Streak bookkeeping, by round kind:
         //  - speculated round, zero confirms  -> streak += 1
@@ -490,11 +479,7 @@ object BpeTrainer {
           // simulate() starved with no known-exact next merge: the coming
           // round is a guaranteed zero-confirm — escalate to the exact
           // fallback now instead of paying a counting job to learn that.
-          if (spec.isEmpty) {
-            zeroStreak = 2
-            if (debug) System.err.println(
-              s"[bpe] round $rounds: empty speculation (horizon $horizon), escalating to exact top-1")
-          }
+          if (spec.isEmpty) zeroStreak = 2
         }
         if (zeroStreak >= 2 && rank <= numMerges) {
           // degenerate window (e.g. everything ties at the horizon): one

@@ -149,8 +149,8 @@ object Footprint {
     // cluster-mode runs write FOOTPRINT_cluster.json: peak_task_mem
     // carries the executor-heap page quantum (CLAUDE.md's -Xmx8g rule),
     // so a small-heap cluster probe must never become the ratchet basis
-    // footprint_history.py records — the same clobber class as the
-    // sweep artifact below
+    // that tools/ratchet.py's footprint row records — the same clobber
+    // class as the sweep artifact below
     val fpPath =
       if (master.startsWith("local-cluster")) "FOOTPRINT_cluster.json"
       else "FOOTPRINT.json"

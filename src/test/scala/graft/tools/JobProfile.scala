@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graft.ListenerDrain
 import scala.collection.mutable
 
 /** Per-job wall-time profile of one query (test scope — never ships).
@@ -10,8 +10,8 @@ import scala.collection.mutable
   * Warms with one untimed pass, then times `runs` passes (default 1) and
   * prints every Spark job of the LAST pass with its duration, stage count,
   * task count, and the first line of its call site — the stage-level view
-  * WarmBench's single number hides. Same session confs as WarmBench
-  * (SPARK_GRAFT_CONF extras honored).
+  * WarmBench's single number hides. Same session as WarmBench
+  * ([[ProfileSession]], SPARK_GRAFT_CONF extras included).
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
@@ -24,12 +24,7 @@ object JobProfile {
     val sfDir = args(0)
     val q = args(1)
     val runs = args.lift(2).map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProfileSession()
 
     case class Job(id: Int, desc: String, start: Long,
                    var end: Long = 0L, var stages: Int = 0, var tasks: Int = 0)
@@ -62,8 +57,8 @@ object JobProfile {
       recording = false
       println(f"JOBPROFILE $q run$i ${lastSec}%.3f s")
     }
+    ListenerDrain.drain(spark.sparkContext) // let late listener events land
     spark.sparkContext.removeSparkListener(listener)
-    Thread.sleep(300) // let late listener events land
     val all = jobs.synchronized(jobs.values.toSeq)
     val acct = all.map(j => (j.end - j.start) / 1e3).sum
     println(f"JOBPROFILE jobs=${all.size} accounted=${acct}%.3f s (wall $lastSec%.3f)")

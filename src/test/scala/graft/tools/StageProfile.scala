@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graft.ListenerDrain
 import scala.collection.mutable
 
 /** Per-STAGE wall/cpu profile of one query (test scope — never ships).
@@ -10,19 +10,19 @@ import scala.collection.mutable
   * Warms once, runs once recording, prints every stage of the recorded
   * pass with wall time, summed task run time, task count, and the stage
   * name (callsite) — the "which operator is the single-threaded wall"
-  * view that job-level numbers hide.
+  * view that job-level numbers hide. Same session as WarmBench
+  * ([[ProfileSession]], SPARK_GRAFT_CONF extras included).
   */
 object StageProfile {
   def main(args: Array[String]): Unit = {
+    if (args.length < 2) {
+      System.err.println("usage: StageProfile <sfDir> <query> [minSec]")
+      sys.exit(2)
+    }
     val sfDir = args(0)
     val q = args(1)
     val minSec = args.lift(2).map(_.toDouble).getOrElse(0.1)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProfileSession()
 
     case class St(id: Int, name: String, submitted: Long,
                   var completed: Long = 0L, var taskMs: Long = 0L,
@@ -64,7 +64,7 @@ object StageProfile {
     run()
     val wall = (System.nanoTime() - t0) / 1e9
     recording = false
-    Thread.sleep(400)
+    ListenerDrain.drain(spark.sparkContext) // let late listener events land
     println(f"STAGEPROFILE $q wall $wall%.3f s")
     val all = stages.synchronized(stages.values.toSeq)
     all.filter(s => (s.completed - s.submitted) / 1e3 >= minSec)

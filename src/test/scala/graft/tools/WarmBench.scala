@@ -1,14 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Warm A/B timing probe (test scope — never ships in the artifact).
   *
   * Usage: sbt "Test/runMain graft.tools.WarmBench <sfDir> <runs> <query>..."
   * Warms the JVM + file cache with one untimed pass of each query, then
   * times `runs` passes each on the SAME session — isolating plan cost from
   * cold-JIT / cold-page-cache noise, which on this shared host inflates
-  * single cold runs 1.5-3x (see tools/bench_history.md).
+  * single cold runs 1.5-3x (see tools/bench_history.md). Session and
+  * SPARK_GRAFT_CONF extras: [[ProfileSession]].
   */
 object WarmBench {
   def main(args: Array[String]): Unit = {
@@ -29,28 +28,7 @@ object WarmBench {
       val qs = pos.drop(2).toSeq
       if (qs.nonEmpty) qs else Seq("q_offset_dedup", "q_simhash", "q_minhash_lsh")
     }
-    // SPARK_GRAFT_CONF="k=v;k2=v2" — extra session confs, e.g.
-    // spark.graft.checkpoint.dir to A/B the reliable-lineage trade.
-    // FAIL LOUDLY on a malformed entry: a silently-dropped typo makes
-    // the A/B measure the default configuration and record a
-    // fabricated delta — worse than no measurement.
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
-      .map { kv =>
-        require(kv.contains("="),
-          s"SPARK_GRAFT_CONF entry '$kv' is not k=v")
-        val Array(k, v) = kv.split("=", 2)
-        require(k.trim.nonEmpty && v.trim.nonEmpty,
-          s"SPARK_GRAFT_CONF entry '$kv' has an empty key or value")
-        (k.trim, v.trim)
-      }
-    val spark = extraConf.foldLeft(SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProfileSession()
     import org.apache.spark.sql.functions.{col, expr, xxhash64}
     def evaluate(q: String): Unit = {
       val df = graft.SparkEntry.queries(q)(spark, sfDir)

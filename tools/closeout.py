@@ -2,26 +2,26 @@
 """One-driver round close-out: runs the CLAUDE.md checklist in order,
 stops on any GATE failure, and collects every ratchet WARN into one
 final list that needs adjudication (judge r15 #7 — the checklist grew
-to 6 tools + 4 history recorders + a merge, and a skipped step is the
-likeliest process failure; the r14 FlushBench ordering lesson is baked
-in: FlushBench runs FIRST, before the x30 sweeps pollute the page
-cache).
+to 6 tools + one ratchet with five families + a merge, and a skipped
+step is the likeliest process failure; the r14 FlushBench ordering
+lesson is baked in: FlushBench runs FIRST, before the x30 sweeps
+pollute the page cache).
 
 Usage:
   python3 tools/closeout.py r<N> [--from STEP] [--only STEP[,STEP..]] [--list]
 
 Steps (in order):
-  test        sbt -batch test (all suites)
+  test        sbt -batch test (all suites) + the ratchet's unit tests
   verify      Verify sf0.01 + check.py (oracle + run-bound runtime sweep)
   reliable    the same under SPARK_GRAFT_CHECKPOINT_DIR -> check.py ->
               reliable_parity.py -> RELIABLE_LINEAGE_PARITY.json
   planaudit   PlanAudit sf0.01, zero FAIL rows
-  flush       FlushBench (idle-FIRST) -> flush_history record
-  stream      StreamBench sf0.1 -> stream_history record
-  fx30        Footprint x30 FULL set -> footprint_history record r<N>
+  flush       FlushBench (idle-FIRST) -> ratchet.py flush record
+  stream      StreamBench sf0.1 -> ratchet.py stream record
+  fx30        Footprint x30 FULL set -> ratchet.py footprint record r<N>
   fx90        Footprint x90 linear + pair families -> record r<N>_x90
   ivfcap      IvfCapBench (engaged pre-cut branch, sweep on)
-  bpe         BpeFallbackBench -> bpe_history record
+  bpe         BpeFallbackBench -> ratchet.py bpe record
   benchsweep  SPARK_GRAFT_BENCH_SWEEP=1 Bench sf0.1 -> RUNTIME_SWEEP_bench.json
   merge       merge_sweeps.py over the five scale artifacts
   parity      LocalClusterParity full set (2 executor JVMs)
@@ -29,7 +29,7 @@ Steps (in order):
   streamkill  LocalClusterStreamSmoke midbatch (in-flight kill leg; a
               test-scope main, run from TEST_CLASSES: Test/compile first)
   bench       final sf0.1 Bench (idle, sweep OFF - the timed basis)
-              -> warm_history record
+              -> ratchet.py warm record
 
 Timed steps (flush, stream, bench) assume an otherwise-idle host: this
 script runs everything serially, so that holds as long as nothing else
@@ -152,9 +152,10 @@ def main():
     ckpt = "/tmp/closeout_reliable_ckpt"
     history_logs = []
 
-    def history(step, cmd):
-        """A ratchet recorder: failures gate, WARNs collect."""
-        status, log = run(step, cmd, {})
+    def history(step, family, *args):
+        """A ratchet record: failures gate, WARNs collect."""
+        _, log = run(step, ["python3", "tools/ratchet.py", family, "record",
+                            *args], {})
         history_logs.append(log)
 
     steps = []
@@ -162,7 +163,11 @@ def main():
     def step(name, fn):
         steps.append((name, fn))
 
-    step("test", lambda: run("test", *sbt_cmd("test")))
+    def test():
+        run("test", *sbt_cmd("test"))
+        run("test_ratchet",
+            ["python3", "-m", "unittest", "tools/test_ratchet.py"], {})
+    step("test", test)
 
     def verify_leg(name, out, env):
         run(f"{name}_run", *sbt_cmd(f'runMain graft.Verify {sf001} {out}',
@@ -192,26 +197,22 @@ def main():
 
     def flush():
         run("flush", *java_cmd("graft.tools.FlushBench", "2000", "10240", "8"))
-        history("flush_record", ["python3", "tools/flush_history.py",
-                                 "record", label, f"{LOGDIR}/flush.log"])
+        history("flush_record", "flush", label, f"{LOGDIR}/flush.log")
     step("flush", flush)
 
     def stream():
         run("stream", *java_cmd("graft.tools.StreamBench", sf01))
-        history("stream_record", ["python3", "tools/stream_history.py",
-                                  "record", label, f"{LOGDIR}/stream.log"])
+        history("stream_record", "stream", label, f"{LOGDIR}/stream.log")
     step("stream", stream)
 
     def fx30():
         run("fx30", *java_cmd("graft.tools.Footprint", x30))
-        history("fx30_record", ["python3", "tools/footprint_history.py",
-                                "record", label])
+        history("fx30_record", "footprint", label)
     step("fx30", fx30)
 
     def fx90():
         run("fx90", *java_cmd("graft.tools.Footprint", x90, *X90_FAMILY))
-        history("fx90_record", ["python3", "tools/footprint_history.py",
-                                "record", f"{label}_x90"])
+        history("fx90_record", "footprint", f"{label}_x90")
     step("fx90", fx90)
 
     step("ivfcap", lambda: run("ivfcap",
@@ -220,8 +221,7 @@ def main():
     def bpe():
         run("bpe", *java_cmd("graft.tools.BpeFallbackBench",
                              "ignored", "1000", "60000"))
-        history("bpe_record", ["python3", "tools/bpe_history.py",
-                               "record", label, f"{LOGDIR}/bpe.log"])
+        history("bpe_record", "bpe", label, f"{LOGDIR}/bpe.log")
     step("bpe", bpe)
 
     step("benchsweep", lambda: run("benchsweep",
@@ -266,10 +266,9 @@ def main():
     def bench():
         run("bench", *java_cmd("graft.Bench", env_extra={
             "SPARK_GRAFT_SF_DIR": sf01, "SPARK_GRAFT_CPUS": "32"}))
-        # Bench prints the JSON line to stdout; warm_history reads
+        # Bench prints the JSON line to stdout; the warm ratchet reads
         # BENCH_FULL.json which Bench writes in cwd
-        history("warm_record", ["python3", "tools/warm_history.py",
-                                "record", label])
+        history("warm_record", "warm", label)
     step("bench", bench)
 
     names = [n for n, _ in steps]
