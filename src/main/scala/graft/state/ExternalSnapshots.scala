@@ -32,6 +32,18 @@ import scala.concurrent.duration.FiniteDuration
   * loudly with a migration message instead of having its first value
   * byte silently stripped by the frame decoder.
   *
+  * The `value` column is written PLAIN-encoded, with no parquet
+  * dictionary: frames are opaque, mostly distinct bytes, and hashing each
+  * one into a dictionary that overflows anyway took a third of the write
+  * stage's CPU samples (4-core host). The other columns keep parquet's
+  * default encodings and the frames are unchanged, so files written with
+  * a dictionary-encoded `value` (by earlier builds) and files written
+  * without one read as one store, under the same stamp. Local (`file:`)
+  * writes and the stamp I/O go through [[LocalStoreFileSystem]], which
+  * sets Hadoop's file and directory modes without starting a `chmod`
+  * process; modes and `.crc` sidecars are those Hadoop's own local
+  * filesystem writes.
+  *
   * Reads use the declared [[SnapshotRow]] schema, never an inferred one, as
   * the reference's snapshot table has a declared schema: no inference job
   * per read, a stamped store with no data files reads as empty, and ids
@@ -46,8 +58,21 @@ object ExternalSnapshots {
 
   private def hadoopFs(spark: SparkSession, dir: String) = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    // the session's confs, as a DataFrame writer's Hadoop conf has them
+    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    (spark.conf.getAll ++ LocalStoreFileSystem.Conf).foreach { case (k, v) => if (v != null) conf.set(k, v) }
+    (p.getFileSystem(conf), p)
   }
+
+  /** The one parquet writer of the store: partitioned by (application_id,
+    * group_id), `value` without a dictionary, local files through
+    * [[LocalStoreFileSystem]]. */
+  private def writeStore(rows: DataFrame, dir: String, mode: SaveMode): Unit =
+    rows.write.mode(mode)
+      .options(LocalStoreFileSystem.Conf)
+      .option("parquet.enable.dictionary#value", "false")
+      .partitionBy("application_id", "group_id")
+      .parquet(dir)
 
   /** Stamp `dir` as framed-v1 (idempotent; same bytes every time, so a
     * concurrent double-create is harmless). */
@@ -117,22 +142,18 @@ object ExternalSnapshots {
     * Values are framed by [[Compressor]] before landing: parquet's own
     * page compression does not help the consumer that reads ONE key's
     * bytes out of the store, and large states (the only ones the
-    * threshold engages) cross systems here. Tombstones stay null. */
+    * threshold engages) cross systems here. Tombstones stay null. The
+    * framing is a codegen'd expression ([[graft.functions.FrameEncode]])
+    * in the projection that feeds the writer. */
   def upsert(rows: Dataset[SnapshotRow], storeDir: String,
              compressionThreshold: Int = CompressionThresholdBytes): Unit = {
-    import rows.sparkSession.implicits._
     requireFramedStore(rows.sparkSession, storeDir)
     // stamp BEFORE appending: a crash between the two must strand an
     // empty-but-stamped dir (readable as an empty store), never a framed
     // store that fails the stamp check as pseudo-legacy
     writeFormatMarker(rows.sparkSession, storeDir)
-    rows.mapPartitions { it =>
-      val c = new Compressor(compressionThreshold)
-      it.map(r => if (r.value == null) r else r.copy(value = c.compress(r.value)))
-    }.write
-      .mode(SaveMode.Append)
-      .partitionBy("application_id", "group_id")
-      .parquet(storeDir)
+    writeStore(rows.toDF().withColumn("value",
+      graft.functions.FrameEncode(col("value"), compressionThreshold)), storeDir, SaveMode.Append)
   }
 
   /** Latest state per key (tombstones resolved away). This is the
@@ -183,11 +204,8 @@ object ExternalSnapshots {
         expr("max_by(metadata, offset)").as("metadata"),
         expr("max_by(value, offset)").as("value"),
         expr("max_by(written_at_ms, offset)").as("written_at_ms"))
-    expiration.fold(latest)(ttl =>
-        latest.filter(col("written_at_ms") >= lit(nowMs - ttl.toMillis)))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("application_id", "group_id")
-      .parquet(outDir)
+    writeStore(expiration.fold(latest)(ttl =>
+      latest.filter(col("written_at_ms") >= lit(nowMs - ttl.toMillis))), outDir, SaveMode.Overwrite)
     writeFormatMarker(spark, outDir)
   }
 

@@ -18,13 +18,13 @@ class FrameDecodeSpec extends SparkTestBase {
 
   test("passthrough frame (marker 0) strips to the payload") {
     val payload = "hello".getBytes("UTF-8")
-    assert(decode(new Compressor(1000).compress(payload)).sameElements(payload))
+    assert(decode(Compressor.encodeFrame(payload, 1000)).sameElements(payload))
   }
 
   test("LZ4 frame (marker 1) round-trips above the threshold") {
     val payload = noiseText(64, span = 4).getBytes("UTF-8") ++
       Array.fill(20000)('x'.toByte)
-    val frame = new Compressor(10000).compress(payload)
+    val frame = Compressor.encodeFrame(payload, 10000)
     assert(frame(0) == 1, "fixture must take the compressed branch")
     assert(frame.length < payload.length, "compressible fixture must shrink")
     assert(decode(frame).sameElements(payload))

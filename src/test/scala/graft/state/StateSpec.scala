@@ -2,28 +2,40 @@ package graft.state
 
 import graft.SparkTestBase
 import graft.model.KafkaKey
-import java.nio.file.Files
+import jdk.jfr.consumer.RecordingStream
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
+
+import java.nio.file.{Files, Path}
+import java.nio.file.attribute.PosixFilePermissions
+import java.util.concurrent.{ConcurrentLinkedQueue, TimeUnit}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 class CompressorSpec extends org.scalatest.funsuite.AnyFunSuite {
-  private val c = new Compressor(thresholdBytes = 64)
+  private val threshold = 64
 
   test("small payloads pass through with marker 0") {
     val payload = "tiny".getBytes("UTF-8")
-    val framed = c.compress(payload)
+    val framed = Compressor.encodeFrame(payload, threshold)
     assert(framed(0) == 0 && framed.length == payload.length + 1)
-    assert(c.decompress(framed).sameElements(payload))
+    assert(Compressor.decodeFrame(framed).sameElements(payload))
   }
 
   test("large payloads compress above threshold and round-trip") {
     val payload = ("abcdefgh" * 100).getBytes("UTF-8") // compressible, > 64
-    val framed = c.compress(payload)
+    val framed = Compressor.encodeFrame(payload, threshold)
     assert(framed(0) == 1)
     assert(framed.length < payload.length)
-    assert(c.decompress(framed).sameElements(payload))
+    assert(Compressor.decodeFrame(framed).sameElements(payload))
   }
 
   test("unknown marker is rejected") {
-    intercept[IllegalArgumentException](c.decompress(Array[Byte](9, 1, 2)))
+    intercept[IllegalArgumentException](Compressor.decodeFrame(Array[Byte](9, 1, 2)))
   }
 }
 
@@ -218,6 +230,143 @@ class ExternalSnapshotsSpec extends SparkTestBase {
     ExternalSnapshots.compact(spark, dir, compacted)
     assert(keys(compacted, "007") == Set("a", "b"))
     assert(keys(compacted, "7") == Set("c"))
+  }
+
+  private def key(k: String) = KafkaKey("app", "g", "t", 0, k)
+
+  /** Parquet column chunks of every data file under `dir`, by column name. */
+  private def chunks(dir: Path): Map[String, Seq[ColumnChunkMetaData]] =
+    Using.resource(Files.walk(dir))(_.iterator.asScala.filter(_.toString.endsWith(".parquet")).toVector)
+      .flatMap { f =>
+        val in = HadoopInputFile.fromPath(new HPath(f.toUri), new Configuration())
+        Using.resource(ParquetFileReader.open(in))(_.getFooter.getBlocks.asScala.toVector
+          .flatMap(_.getColumns.asScala))
+      }.groupBy(_.getPath.toDotString)
+
+  private def dictionaryEncoded(cs: Seq[ColumnChunkMetaData]): Boolean =
+    cs.nonEmpty && cs.forall(c => c.hasDictionaryPage && c.getEncodings.asScala.exists(_.usesDictionary))
+
+  test("upsert writes value without a parquet dictionary; the other columns keep theirs") {
+    import spark.implicits._
+    val dir = tempDir("snapdict")
+    // three distinct small values over 300 rows: a dictionary's best case
+    ExternalSnapshots.upsert((0 until 300).map(i =>
+      ExternalSnapshots.rowFor(key(s"k$i"), i, "", s"v${i % 3}".getBytes("UTF-8"))).toDS(), dir.toString)
+    val cols = chunks(dir)
+    assert(cols("value").forall(c => !c.hasDictionaryPage && !c.getEncodings.asScala.exists(_.usesDictionary)),
+      cols("value").map(_.getEncodings).mkString(", "))
+    assert(dictionaryEncoded(cols("topic")) && dictionaryEncoded(cols("metadata")))
+  }
+
+  /** Command lines of the processes this JVM starts while `body` runs. */
+  private def processStarts(body: => Unit): Vector[String] = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val rs = new RecordingStream()
+    rs.enable("jdk.ProcessStart")
+    rs.onEvent("jdk.ProcessStart", e => seen.add(e.getString("command")))
+    rs.startAsync()
+    try {
+      body
+      // a later process start is delivered after every earlier one
+      val marker = s"store-fork-sentinel-${java.util.UUID.randomUUID}"
+      new ProcessBuilder("sh", "-c", s": $marker").start().waitFor()
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
+      while (!seen.asScala.exists(_.contains(marker)) && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(seen.asScala.exists(_.contains(marker)), "the recording saw no process start")
+      seen.asScala.filterNot(_.contains(marker)).toVector
+    } finally rs.close()
+  }
+
+  test("upsert, compact and readLatest start no process naming the store; " +
+    "a plain parquet write does") {
+    import spark.implicits._
+    val store, compacted, plain = tempDir("snapfork").toRealPath()
+    val rows = (0 until 40).map(i =>
+      ExternalSnapshots.rowFor(key(s"k$i"), i, "", Array.fill(i * 500)(i.toByte))).toDS()
+    val starts = processStarts {
+      ExternalSnapshots.upsert(rows, store.toString)
+      ExternalSnapshots.upsert(rows, store.toString)
+      ExternalSnapshots.compact(spark, store.toString, compacted.toString)
+      Seq(store, compacted).foreach(d =>
+        assert(ExternalSnapshots.readLatest(spark, d.toString, "app", "g").count() == 40))
+      rows.toDF().write.partitionBy("application_id", "group_id").parquet(plain.resolve("out").toString)
+    }
+    def naming(d: Path) = starts.filter(_.contains(d.toString))
+    val forked = naming(store) ++ naming(compacted)
+    assert(forked.isEmpty, s"${forked.size} process starts name the store, first ${forked.take(3)}")
+    assert(org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded || naming(plain).nonEmpty,
+      "control: without libhadoop a plain parquet write starts chmod processes")
+  }
+
+  test("the store's files and directories get the modes and .crc sidecars of a plain parquet write") {
+    // a umask other than the process's: a mode that was never set shows
+    val s = spark.newSession()
+    s.conf.set("fs.permissions.umask-mode", "027")
+    import s.implicits._
+    val store, plain = tempDir("snapmode")
+    val rows = (0 until 20).map(i =>
+      ExternalSnapshots.rowFor(key(s"k$i"), i, "", Array.fill(i * 1000)(i.toByte))).toDS().repartition(3)
+    ExternalSnapshots.upsert(rows, store.toString)
+    // Hadoop's own local filesystem, uncached so it reads the session's umask
+    rows.toDF().write.mode("append").option("fs.file.impl.disable.cache", "true")
+      .partitionBy("application_id", "group_id").parquet(plain.toString)
+    /** Each path's name, part-file ids dropped, to how many have it and their modes. */
+    def tree(root: Path): Map[String, (Int, Set[String])] =
+      Using.resource(Files.walk(root))(_.iterator.asScala.filter(_ != root).toVector)
+        .map(p => root.relativize(p).toString.replaceAll("part-[0-9]+-[0-9a-f-]+\\.c[0-9]+", "part") ->
+          PosixFilePermissions.toString(Files.getPosixFilePermissions(p)))
+        .groupBy(_._1).map { case (n, v) => n -> ((v.size, v.map(_._2).toSet)) }
+    val stamp = ExternalSnapshots.FormatFileName
+    val got = tree(store)
+    val want = tree(plain)
+    assert(got -- Seq(stamp, s".$stamp.crc") == want)
+    val data = "application_id=app/group_id=g/part.snappy.parquet"
+    assert(want(data)._1 == 3 && want(s"application_id=app/group_id=g/.part.snappy.parquet.crc")._1 == 3)
+    assert(want(data)._2 == Set("rw-r-----") && want("application_id=app")._2 == Set("rwxr-x---"),
+      s"the umask must reach both writers: $want")
+    assert(got(stamp)._2 == want(data)._2 && got(s".$stamp.crc")._2 == want(data)._2)
+  }
+
+  test("the local filesystem keeps a sticky bit through Hadoop's own chmod") {
+    val dir = tempDir("snapsticky")
+    def octal(s: String) = Integer.parseInt(s, 8)
+    def mode = Files.getAttribute(dir, "unix:mode").asInstanceOf[Int] & octal("7777")
+    val fs = new LocalStoreFileSystem
+    fs.initialize(java.net.URI.create("file:///"), new Configuration())
+    fs.setPermission(new HPath(dir.toUri), new FsPermission(octal("1750").toShort))
+    assert(mode == octal("1750"))
+    // without a sticky bit the java.nio path sets the mode, clearing it as chmod 0700 does
+    fs.setPermission(new HPath(dir.toUri), new FsPermission(octal("700").toShort))
+    assert(mode == octal("700"))
+  }
+
+  test("a store holding a dictionary-encoded generation (the earlier writer) " +
+    "and an upsert generation reads back exactly") {
+    import spark.implicits._
+    val dir = tempDir("snapmixed")
+    val threshold = ExternalSnapshots.CompressionThresholdBytes
+    def value(k: Int, gen: Int) = Array.fill(if (k % 2 == 0) threshold + k else 100 + k)((k * gen).toByte)
+    // generation 1 as the earlier writer left it: frames, parquet's
+    // default encodings, and the stamp. Its values repeat, so parquet
+    // keeps the dictionary it would drop for distinct ones.
+    def first(k: Int) = value(k % 4, 1)
+    Files.write(dir.resolve(ExternalSnapshots.FormatFileName),
+      ExternalSnapshots.FormatId.getBytes("UTF-8"))
+    (0 until 30).map(k => ExternalSnapshots.rowFor(key(s"k$k"), k, s"m$k",
+        Compressor.encodeFrame(first(k), threshold))).toDS()
+      .write.mode("append").partitionBy("application_id", "group_id").parquet(dir.toString)
+    assert(dictionaryEncoded(chunks(dir)("value")), "generation 1 must hold a dictionary-encoded value")
+    // generation 2: keys 20-39 rewritten or new, key 25 deleted
+    ExternalSnapshots.upsert((20 until 40).map(k => ExternalSnapshots.rowFor(key(s"k$k"), 100 + k, s"n$k",
+      if (k == 25) null else value(k, 2))).toDS(), dir.toString)
+    val want = (0 until 40).filter(_ != 25).map { k =>
+      if (k < 20) (s"k$k", k.toLong, s"m$k", first(k).toSeq)
+      else (s"k$k", 100L + k, s"n$k", value(k, 2).toSeq)
+    }.toSet
+    val got = ExternalSnapshots.readLatest(spark, dir.toString, "app", "g").collect().map(r =>
+      (r.getAs[String]("key"), r.getAs[Long]("offset"), r.getAs[String]("metadata"),
+        r.getAs[Array[Byte]]("value").toSeq)).toSet
+    assert(got == want)
   }
 
   test("journal STREAMING source: live tail into KeyFlowTws matches batch " +

@@ -9,9 +9,10 @@ import scala.collection.mutable
   * Usage: sbt "Test/runMain graft.tools.JobProfile <sfDir> <query> [runs]"
   * Warms with one untimed pass, then times `runs` passes (default 1) and
   * prints every Spark job of the LAST pass with its duration, stage count,
-  * task count, and the first line of its call site — the stage-level view
-  * WarmBench's single number hides. Same session as WarmBench
-  * ([[ProfileSession]], SPARK_GRAFT_CONF extras included).
+  * task count, and its call site (its result stage's name; an adaptive
+  * query stage's job names the thread pool that submitted it) — the
+  * stage-level view WarmBench's single number hides. Same session as
+  * WarmBench ([[ProfileSession]], SPARK_GRAFT_CONF extras included).
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
@@ -32,8 +33,8 @@ object JobProfile {
     @volatile var recording = false
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = if (recording) {
-        val site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("")
+        // the result stage (the job's last) is named after the job's call site
+        val site = e.stageInfos.maxByOption(_.stageId).fold("")(_.name)
         jobs.synchronized {
           jobs(e.jobId) = Job(e.jobId, site, e.time,
             stages = e.stageInfos.size,

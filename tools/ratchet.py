@@ -7,7 +7,7 @@ on the same corpus, so an x90 run never ratchets against an x30 one):
 
   warm       sf0.1 Bench's BENCH_FULL.json: warm per-query seconds
   flush      FlushBench log: the 2000 x 10 KiB state flush the reference
-             publishes at 0.282 s
+             publishes at 0.282 s, and the recovery read (read_latest)
   stream     StreamBench log: keyed-fold ingest rec/s (a failed fold check
              is refused)
   bpe        BpeFallbackBench log: merges per counting job
@@ -158,6 +158,12 @@ def compare_flush(prev, cur, r):
     if ratio > r["ratio_bar"]:
         out.append(f"WARN flush ratio {ratio:.2f}x exceeds the {r['ratio_bar']}x "
                    "match-or-beat band vs the reference's published 0.282 s")
+    # the recovery read, when both entries recorded one
+    p_read, c_read = prev.get("read_latest"), cur.get("read_latest")
+    if p_read and c_read and c_read > r["growth"] * p_read:
+        out.append(f"WARN flush read_latest {p_read:.3f} -> {c_read:.3f} s "
+                   f"(>{r['growth']}x round-over-round) — idle-host re-run + "
+                   "adjudication or fix required")
     return out
 
 

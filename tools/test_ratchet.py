@@ -190,6 +190,18 @@ RULES = [
          "WARN flush ratio 2.13x exceeds the 2.0x match-or-beat band vs the reference's "
          "published 0.282 s\n"
          "FLAGS: 1\n"),
+    rule("flush read growth", "flush",
+         [{"label": "a", "best": 0.3, "read_latest": 1.0},
+          {"label": "b", "best": 0.3, "read_latest": 1.4}],
+         "flush: a best 0.300 s -> b best 0.300 s (ratio vs reference 0.282 s: 1.06x)\n"
+         "WARN flush read_latest 1.000 -> 1.400 s (>1.3x round-over-round) — idle-host "
+         "re-run + adjudication or fix required\n"
+         "FLAGS: 1\n"),
+    rule("flush read growth needs both reads", "flush",
+         [{"label": "a", "best": 0.3, "read_latest": None},
+          {"label": "b", "best": 0.3, "read_latest": 1.4}],
+         "flush: a best 0.300 s -> b best 0.300 s (ratio vs reference 0.282 s: 1.06x)\n"
+         "FLAGS: 0\n"),
     rule("stream drop", "stream", [{"label": "a", "median": 30000, "iqr_spread": 0.1},
                                    {"label": "b", "median": 20000, "iqr_spread": 0.1}],
          "stream: a median 30000 rec/s -> b median 20000 rec/s (IQR spread 10%)\n"
