@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -53,15 +53,15 @@ object Tables {
 
   /** The file METADATA under `path` (a file or a directory tree): each
     * leaf's `path:length:mtime`, sorted; no data is read. A rewrite,
-    * append or delete changes it. One recursive listing, no Spark job. */
+    * append or delete changes it. A recursive `listStatus` walk, no Spark
+    * job: `listFiles` would build a `LocatedFileStatus` per leaf, whose
+    * constructor loads the file's permissions, and on the local
+    * filesystem without libhadoop that starts one `ls -ld` process each. */
   def fingerprint(fs: FileSystem, path: Path): String = {
-    val leaves = fs.listFiles(path, true)
-    val out = Seq.newBuilder[String]
-    while (leaves.hasNext) {
-      val f = leaves.next()
-      out += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
-    }
-    out.result().sorted.mkString("|")
+    def leaves(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.flatMap(s => if (s.isDirectory) leaves(s.getPath) else Seq(s))
+    leaves(path).map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
+      .sorted.mkString("|")
   }
 
   /** `spark.read.parquet(path)` with the schema taken from the memo (see

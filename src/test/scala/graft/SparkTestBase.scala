@@ -70,6 +70,27 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     d
   }
 
+  /** Command lines of the processes this JVM starts while `body` runs,
+    * from an in-process JFR recording of `jdk.ProcessStart`. */
+  def processStarts(body: => Unit): Vector[String] = {
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val rs = new jdk.jfr.consumer.RecordingStream()
+    rs.enable("jdk.ProcessStart")
+    rs.onEvent("jdk.ProcessStart", e => seen.add(e.getString("command")))
+    rs.startAsync()
+    try {
+      body
+      // a later process start is delivered after every earlier one
+      val marker = s"process-start-sentinel-${java.util.UUID.randomUUID}"
+      new ProcessBuilder("sh", "-c", s": $marker").start().waitFor()
+      val deadline = System.nanoTime() + java.util.concurrent.TimeUnit.SECONDS.toNanos(60)
+      while (!seen.asScala.exists(_.contains(marker)) && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(seen.asScala.exists(_.contains(marker)), "the recording saw no process start")
+      seen.asScala.filterNot(_.contains(marker)).toVector
+    } finally rs.close()
+  }
+
   override def afterAll(): Unit =
     try tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteDirectory(d))
     finally super.afterAll()

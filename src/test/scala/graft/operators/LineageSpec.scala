@@ -44,7 +44,7 @@ class LineageSpec extends SparkTestBase {
         s"reliable mode must write checkpoint files under $dir")
     } finally {
       spark.conf.unset(Lineage.ConfKey)
-      // whole tree, not just files (the FlushBench cleanup idiom)
+      // the whole tree, not just its files
       scala.reflect.io.Path(dir).deleteRecursively()
     }
   }

@@ -1,10 +1,14 @@
 package graft.sources
 
 import graft.{SparkTestBase, Tables}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
+import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** The `Tables` schema memo: a table's schema is inferred once, later reads
   * reuse it until the table's files change. */
@@ -55,5 +59,41 @@ class TablesSpec extends SparkTestBase {
     val pairs = l.join(r, l("o_custkey") === r("o_custkey") && l("o_orderkey") < r("o_orderkey"))
     // custkey groups of sizes 3, 4, 3 give 3 + 6 + 3 ordered pairs
     assert(pairs.count() == 12)
+  }
+
+  /** The fingerprint as a `listFiles` walk made it before. */
+  private def listFilesFingerprint(fs: FileSystem, path: Path): String = {
+    val leaves = fs.listFiles(path, true)
+    val out = Seq.newBuilder[String]
+    while (leaves.hasNext) {
+      val f = leaves.next()
+      out += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
+    }
+    out.result().sorted.mkString("|")
+  }
+
+  test("the fingerprint equals the listFiles one and a read starts no process per file") {
+    val dir = tempDir("tables-fingerprint").toRealPath()
+    val table = dir.resolve("orders.parquet")
+    (1 to 40).map(i => (i, i % 4)).toDF("o_orderkey", "o_shard")
+      .write.partitionBy("o_shard").parquet(table.toString)
+    val names = Using.resource(Files.walk(table))(_.iterator.asScala.toVector)
+    assert(names.exists(_.endsWith("_SUCCESS")) && names.exists(_.toString.endsWith(".crc")) &&
+      names.exists(p => p != table && Files.isDirectory(p)), "a table with every kind of entry")
+    val path = new Path(table.toString)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(Tables.fingerprint(fs, path) == listFilesFingerprint(fs, path))
+    val file = new Path(names.find(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet")).get.toString)
+    assert(Tables.fingerprint(fs, file) == listFilesFingerprint(fs, file), "a single file")
+
+    def naming(starts: Vector[String]) = starts.filter(_.contains(dir.toString))
+    val forked = naming(processStarts {
+      assert(Tables.parquet(spark, table.toString).count() == 40)
+      assert(Tables.parquet(spark, table.toString).count() == 40)
+    })
+    assert(forked.isEmpty, s"${forked.size} process starts name the table, first ${forked.take(3)}")
+    assert(org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded ||
+      naming(processStarts(listFilesFingerprint(fs, path))).nonEmpty,
+      "control: without libhadoop a listFiles walk starts a process per file")
   }
 }

@@ -2,7 +2,6 @@ package graft.state
 
 import graft.SparkTestBase
 import graft.model.KafkaKey
-import jdk.jfr.consumer.RecordingStream
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -12,7 +11,6 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import java.nio.file.{Files, Path}
 import java.nio.file.attribute.PosixFilePermissions
-import java.util.concurrent.{ConcurrentLinkedQueue, TimeUnit}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
@@ -256,25 +254,6 @@ class ExternalSnapshotsSpec extends SparkTestBase {
     assert(cols("value").forall(c => !c.hasDictionaryPage && !c.getEncodings.asScala.exists(_.usesDictionary)),
       cols("value").map(_.getEncodings).mkString(", "))
     assert(dictionaryEncoded(cols("topic")) && dictionaryEncoded(cols("metadata")))
-  }
-
-  /** Command lines of the processes this JVM starts while `body` runs. */
-  private def processStarts(body: => Unit): Vector[String] = {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val rs = new RecordingStream()
-    rs.enable("jdk.ProcessStart")
-    rs.onEvent("jdk.ProcessStart", e => seen.add(e.getString("command")))
-    rs.startAsync()
-    try {
-      body
-      // a later process start is delivered after every earlier one
-      val marker = s"store-fork-sentinel-${java.util.UUID.randomUUID}"
-      new ProcessBuilder("sh", "-c", s": $marker").start().waitFor()
-      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
-      while (!seen.asScala.exists(_.contains(marker)) && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(seen.asScala.exists(_.contains(marker)), "the recording saw no process start")
-      seen.asScala.filterNot(_.contains(marker)).toVector
-    } finally rs.close()
   }
 
   test("upsert, compact and readLatest start no process naming the store; " +

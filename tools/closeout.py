@@ -3,9 +3,9 @@
 stops on any GATE failure, and collects every ratchet WARN into one
 final list that needs adjudication (judge r15 #7 — the checklist grew
 to 6 tools + one ratchet with five families + a merge, and a skipped
-step is the likeliest process failure; the r14 FlushBench ordering
-lesson is baked in: FlushBench runs FIRST, before the x30 sweeps
-pollute the page cache).
+step is the likeliest process failure; the r14 flush ordering lesson is
+baked in: the flush runs FIRST among the timed steps, before the x30
+sweeps pollute the page cache).
 
 Usage:
   python3 tools/closeout.py r<N> [--from STEP] [--only STEP[,STEP..]] [--list]
@@ -16,8 +16,10 @@ Steps (in order):
   reliable    the same under SPARK_GRAFT_CHECKPOINT_DIR -> check.py ->
               reliable_parity.py -> RELIABLE_LINEAGE_PARITY.json
   planaudit   PlanAudit sf0.01, zero FAIL rows
-  flush       FlushBench (idle-FIRST) -> ratchet.py flush record
-  stream      StreamBench sf0.1 -> ratchet.py stream record
+  flush       perfbench flush_recover --trace 1, seeds 1-3 (idle-FIRST)
+              -> ratchet.py flush record
+  stream      perfbench fold_stream --trace 0, seeds 1-3
+              -> ratchet.py stream record
   fx30        Footprint x30 FULL set -> ratchet.py footprint record r<N>
   fx90        Footprint x90 linear + pair families -> record r<N>_x90
   ivfcap      IvfCapBench (engaged pre-cut branch, sweep on)
@@ -195,15 +197,25 @@ def main():
             sys.exit(1)
     step("planaudit", planaudit)
 
-    def flush():
-        run("flush", *java_cmd("graft.tools.FlushBench", "2000", "10240", "8"))
-        history("flush_record", "flush", label, f"{LOGDIR}/flush.log")
-    step("flush", flush)
+    def perfbench(name, workload, trace):
+        """Seeds 1-3 of one perfbench workload, their logs joined into
+        <name>.log. A run that exits 1 (a failed op or output check)
+        still prints its result line: the ratchet refuses it."""
+        logs = [run(f"{name}_seed{seed}",
+                    ["python3", "perfbench/run.py", "--workload", workload,
+                     "--seed", str(seed), "--seconds", "12",
+                     "--trace", str(trace)], {}, ok_codes=(0, 1))[1]
+                for seed in (1, 2, 3)]
+        joined = f"{LOGDIR}/{name}.log"
+        with open(joined, "w") as out:
+            for log in logs:
+                out.write(open(log).read())
+        return joined
 
-    def stream():
-        run("stream", *java_cmd("graft.tools.StreamBench", sf01))
-        history("stream_record", "stream", label, f"{LOGDIR}/stream.log")
-    step("stream", stream)
+    step("flush", lambda: history("flush_record", "flush", label,
+                                  perfbench("flush", "flush_recover", 1)))
+    step("stream", lambda: history("stream_record", "stream", label,
+                                   perfbench("stream", "fold_stream", 0)))
 
     def fx30():
         run("fx30", *java_cmd("graft.tools.Footprint", x30))

@@ -2,17 +2,26 @@
 """One per-round ratchet for every close-out number, with automatic WARNs.
 
 Each family records its runs in tools/<family>_history.json and WARNs on
-the newest entry against the one before it (footprint: the one before it
-on the same corpus, so an x90 run never ratchets against an x30 one):
+the newest entry against the previous one of its chain (footprint: the
+same corpus, so an x90 run never ratchets against an x30 one; flush and
+stream: the same harness and core count):
 
   warm       sf0.1 Bench's BENCH_FULL.json: warm per-query seconds
-  flush      FlushBench log: the 2000 x 10 KiB state flush the reference
-             publishes at 0.282 s, and the recovery read (read_latest)
-  stream     StreamBench log: keyed-fold ingest rec/s (a failed fold check
-             is refused)
+  flush      perfbench flush_recover --trace 1 log: `best` is the lowest
+             snap.upsert_ms over the runs, the 2000 x 10 KiB state flush
+             the reference publishes at 0.282 s; `read_latest` the lowest
+             snap.read_ms, the recovery read
+  stream     perfbench fold_stream log: the median op_p50_ms over the
+             runs, one 10,000-record microbatch, and its IQR spread
   bpe        BpeFallbackBench log: merges per counting job
   footprint  Footprint's FOOTPRINT.json (x30 / x90): per-query skew, peak
              task memory, disk spill
+
+A perfbench log holds one JSON result line per run (close-out runs seeds
+1-3); a run whose output check failed or that failed an op is refused.
+Entries from before perfbench (the r10-r16 test-scope tools on local[32]:
+flush seconds, ingest rec/s; no harness or core count) form their own
+closed chains.
 
 The rules are the `rules` of each FAMILIES row. A WARN needs an idle-host
 re-run and either a fix or an adjudication note in tools/bench_history.md.
@@ -25,12 +34,13 @@ Usage:
   python3 tools/ratchet.py <family> check     # re-compare the newest entries
 
 Exit code: 0 on success, flags included (a flag demands adjudication, not
-an automatic failure); 1 when stream refuses a failed fold check; 2 on a
-usage error or a missing or unparseable source.
+an automatic failure); 1 when flush or stream refuses a failed perfbench
+run; 2 on a usage error or a missing or unparseable source.
 """
 import json
 import os
 import re
+import statistics
 import sys
 from collections import namedtuple
 
@@ -62,28 +72,49 @@ def parse_warm(text, path):
                         for k, v in full["queries"].items()}}
 
 
+def cores():
+    """The host's core count, as perfbench sizes its session (local[n])."""
+    return len(os.sched_getaffinity(0))
+
+
+def perfbench_runs(text, path, metric):
+    """The metrics of each perfbench JSON result line in `text` that measured
+    `metric`: a line of another workload or trace mode lacks it or reads 0."""
+    runs = []
+    for line in text.splitlines():
+        try:
+            res = json.loads(line)
+        except ValueError:
+            continue
+        if isinstance(res, dict) and res.get("metrics", {}).get(metric, {}).get("value"):
+            runs.append(res)
+    if not runs:
+        die(f"no perfbench result line with {metric} found in {path}")
+    for res in runs:
+        if res.get("correct") is not True or res.get("failed", 0) > 0:
+            die(f"REFUSED: a perfbench run failed (correct={json.dumps(res.get('correct'))}, "
+                f"failed={res.get('failed')}) — fix the engine before recording "
+                "a number", 1)
+    return [{k: m["value"] for k, m in res["metrics"].items()} for res in runs]
+
+
 def parse_flush(text, path):
-    runs = [float(s) for s in re.findall(r"FLUSHBENCH upsert run\d+ ([0-9.]+) s", text)]
-    latest = re.findall(r"FLUSHBENCH readLatest ([0-9.]+) s", text)
-    best = re.findall(r"FLUSHBENCH best ([0-9.]+) s", text)
-    if not best and not runs:
-        die(f"no FLUSHBENCH lines found in {path}")
-    return {"best": float(best[-1]) if best else min(runs), "runs": runs,
-            "read_latest": float(latest[-1]) if latest else None}
+    runs = perfbench_runs(text, path, "snap.upsert_ms")
+    upserts = [round(r["snap.upsert_ms"] / 1000, 4) for r in runs]
+    return {"harness": "perfbench", "cores": cores(), "best": min(upserts),
+            "runs": upserts,
+            "read_latest": round(min(r["snap.read_ms"] for r in runs) / 1000, 4)}
 
 
 def parse_stream(text, path):
-    summary = re.findall(r"STREAMBENCH steady-state mean (\d+) rec/s, "
-                         r"median (\d+) rec/s, IQR spread (\d+)%", text)
-    checks = re.findall(r"fold_check=(\w+)", text)
-    if not summary or not checks:
-        die(f"no STREAMBENCH summary line found in {path}")
-    if checks[-1] != "true":
-        die("REFUSED: fold self-check failed — fix the fold before "
-            "recording a throughput number", 1)
-    mean, median, spread = summary[-1]
-    return {"median": int(median), "mean": int(mean),
-            "iqr_spread": int(spread) / 100.0, "fold_check": True}
+    p50 = [round(r["op_p50_ms"], 1) for r in perfbench_runs(text, path, "op_p50_ms")]
+    median = statistics.median(p50)
+    spread = None
+    if len(p50) > 1:  # perfbench README's spread: quartile distance over the median
+        q1, _, q3 = statistics.quantiles(p50, n=4)
+        spread = round((q3 - q1) / median, 3)
+    return {"harness": "perfbench", "cores": cores(), "op_p50_ms": median,
+            "runs": p50, "iqr_spread": spread}
 
 
 def parse_bpe(text, path):
@@ -168,15 +199,20 @@ def compare_flush(prev, cur, r):
 
 
 def compare_stream(prev, cur, r):
-    out = [f"stream: {prev['label']} median {prev['median']} rec/s -> "
-           f"{cur['label']} median {cur['median']} rec/s "
-           f"(IQR spread {cur['iqr_spread'] * 100:.0f}%)"]
-    if cur["median"] * r["drop"] < prev["median"]:
-        out.append(f"WARN stream median {prev['median']} -> {cur['median']} rec/s "
-                   f"(>{r['drop']}x drop round-over-round) — idle-host re-run + "
-                   "adjudication or fix required")
-    if cur["iqr_spread"] is not None and cur["iqr_spread"] > r["spread_bar"]:
-        out.append(f"WARN stream IQR spread {cur['iqr_spread'] * 100:.0f}% exceeds "
+    # an entry from before perfbench holds ingest rec/s (a drop is worse),
+    # a perfbench one the op_p50_ms of a batch (growth is worse)
+    legacy = "median" in cur
+    key, name, unit, worse = (("median", "median", "rec/s", "drop") if legacy
+                              else ("op_p50_ms", "op_p50", "ms", "growth"))
+    p, c = prev[key], cur[key]
+    spread = cur["iqr_spread"]
+    out = [f"stream: {prev['label']} {name} {p} {unit} -> {cur['label']} {name} {c} {unit} "
+           f"(IQR spread {'n/a' if spread is None else f'{spread * 100:.0f}%'})"]
+    if (c * r["growth"] < p) if legacy else (c > r["growth"] * p):
+        out.append(f"WARN stream {name} {p} -> {c} {unit} (>{r['growth']}x {worse} "
+                   "round-over-round) — idle-host re-run + adjudication or fix required")
+    if spread is not None and spread > r["spread_bar"]:
+        out.append(f"WARN stream IQR spread {spread * 100:.0f}% exceeds "
                    f"{r['spread_bar'] * 100:.0f}% — the median is noise; re-run idle")
     return out
 
@@ -246,25 +282,29 @@ def compare_footprint(prev, cur, r):
 
 # ---- the spec table, one row per family. source: the default source
 # file (repo root), or None when one is required; producer: the close-out
-# step that writes it; chain: the entry key that splits the history into
-# separately ratcheted chains (None: one chain) ----
+# step that writes it; chain: the entry keys that split the history into
+# separately ratcheted chains (none: one chain) ----
 Family = namedtuple("Family", "source producer parse summary compare rules chain")
+PERFBENCH_CHAIN = ("harness", "cores")
 
 FAMILIES = {
     "warm": Family(
         "BENCH_FULL.json", "the sf0.1 Bench step", parse_warm,
         lambda e: f"warm_total={e['warm_total']}s, {len(e['queries'])} queries",
-        compare_warm, {"ratio": 1.3, "min_s": 0.3}, None),
+        compare_warm, {"ratio": 1.3, "min_s": 0.3}, ()),
     "flush": Family(
-        None, "FlushBench", parse_flush, lambda e: f"best {e['best']:.3f} s",
-        compare_flush, {"growth": 1.3, "reference": 0.282, "ratio_bar": 2.0}, None),
+        None, "perfbench flush_recover --trace 1", parse_flush,
+        lambda e: f"best {e['best']:.3f} s on {e['cores']} cores",
+        compare_flush, {"growth": 1.3, "reference": 0.282, "ratio_bar": 2.0},
+        PERFBENCH_CHAIN),
     "stream": Family(
-        None, "StreamBench", parse_stream, lambda e: f"median {e['median']} rec/s",
-        compare_stream, {"drop": 1.3, "spread_bar": 0.35}, None),
+        None, "perfbench fold_stream", parse_stream,
+        lambda e: f"op_p50 {e['op_p50_ms']} ms on {e['cores']} cores",
+        compare_stream, {"growth": 1.3, "spread_bar": 0.35}, PERFBENCH_CHAIN),
     "bpe": Family(
         None, "BpeFallbackBench", parse_bpe,
         lambda e: f"merges/job={e['merges_per_job']}",
-        compare_bpe, {"bar": 10.0, "drop": 1.3}, None),
+        compare_bpe, {"bar": 10.0, "drop": 1.3}, ()),
     "footprint": Family(
         "FOOTPRINT.json", "the x30 Footprint step", parse_footprint,
         lambda e: f"{len(e['queries'])} queries",
@@ -274,7 +314,7 @@ FAMILIES = {
          "peak_growth": 1.3,        # round-over-round peak task memory growth
          "peak_floor": 64 << 20,    # ignore peak ratios under 64 MiB (allocator noise)
          "spill_new": 1 << 30},     # spill newly above 1 GiB
-        "sf"),
+        ("sf",)),
 }
 
 
@@ -304,7 +344,9 @@ def main(argv):
         return
     # the newest entry against the previous one of its chain; a lone entry
     # is compared with itself, so the absolute bars still apply
-    chain = [e for e in history if e.get(fam.chain) == history[-1].get(fam.chain)]
+    def key(e):
+        return [e.get(k) for k in fam.chain]
+    chain = [e for e in history if key(e) == key(history[-1])]
     lines = fam.compare(chain[-2] if len(chain) > 1 else chain[-1], chain[-1], fam.rules)
     for line in lines:
         print(line)

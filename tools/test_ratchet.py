@@ -1,9 +1,10 @@
 """Tests for tools/ratchet.py: output and history bytes on the committed
 histories, one planted input per WARN rule, and the exit codes.
 
-The expected strings, exit codes and history hashes were captured from
-the per-family ratchet scripts ratchet.py replaced, run on the same
-inputs, so a change in what a family prints or records shows here.
+The warm, bpe and footprint strings, exit codes and history hashes were
+captured from the per-family ratchet scripts ratchet.py replaced, run on
+the same inputs; flush and stream record planted perfbench result lines.
+A change in what a family prints or records shows here.
 
   python3 -m unittest tools/test_ratchet.py
 """
@@ -45,16 +46,6 @@ def source(family, e):
             "max_task_shuffle_read": q["max_task_read"],
             "peak_task_mem": q["peak_task_mem"], "spill_disk": q["spill_disk"]}
             for k, q in e["queries"].items()}})
-    if family == "flush":
-        return "".join(
-            [f"FLUSHBENCH upsert run{i} {s:.3f} s (keys=2000 bytes=10240 parts=8)\n"
-             for i, s in enumerate(e["runs"], 1)] +
-            [f"FLUSHBENCH readLatest {e['read_latest']:.3f} s (2000 keys over 3 generations)\n",
-             f"FLUSHBENCH best {e['best']:.3f} s vs reference 0.282-0.300 s\n"])
-    if family == "stream":
-        return (f"STREAMBENCH steady-state mean {e['mean']} rec/s, median {e['median']} "
-                f"rec/s, IQR spread {e['iqr_spread'] * 100:.0f}% (range 1-2) over 8 steady "
-                "batches of 11111 records (88888 records, 7.50 s); keys=1500 fold_check=true\n")
     return (f"BPEFALLBACK {e['corpus']} cap={e['cap']} merges={e['merges']} "
             f"counting_jobs={e['counting_jobs']} actions={e['actions']} "
             f"merges_per_job={e['merges_per_job']} wall=9.9 s sf=ignored\n")
@@ -70,9 +61,13 @@ def fp(label, sf="/x30", **q):
         for k, v in q.items()}}
 
 
+CORES = 4  # the core count a planted record runs on
+
+
 def run(family, history, args, files):
     """ratchet.py <family> <args> on a temp history ({dir} in args and in the
-    output is that directory) -> (stdout, exit code, sha256 of the history)."""
+    output is that directory), on a CORES-core host -> (stdout, exit code,
+    sha256 of the history)."""
     with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, f"{family}_history.json")
         if history is not None:
@@ -82,7 +77,9 @@ def run(family, history, args, files):
             with open(os.path.join(d, name), "w") as f:
                 f.write(text)
         out, code = io.StringIO(), 0
-        with mock.patch.object(ratchet, "HERE", d), contextlib.redirect_stdout(out):
+        with mock.patch.object(ratchet, "HERE", d), \
+                mock.patch.object(ratchet, "cores", lambda: CORES), \
+                contextlib.redirect_stdout(out):
             try:
                 ratchet.main([family] + [a.format(dir=d) for a in args])
             except SystemExit as e:
@@ -106,13 +103,18 @@ EMPTY = "4f53cda18c2baa0c0354bb5f9a3ecbe5ed12ab4d8e11ba873c2f11161202b945"  # "[
 
 
 def pinned(family, verb, out, digest):
-    args = ["check"] if verb == "check" else ["record", PIN, "{dir}/src"]
-    return (f"{family} {verb}", family, committed(family), args,
-            {"src": source(family, committed(family)[-1])}, out, 0, digest)
+    if verb == "check":
+        args, files = ["check"], {}
+    else:
+        args, files = ["record", PIN, "{dir}/src"], {"src": source(family, committed(family)[-1])}
+    return (f"{family} {verb}", family, committed(family), args, files, out, 0, digest)
 
 
 # Recording the pinned entry again rewrites each committed history byte for
 # byte: the digests are those of the committed tools/*_history.json files.
+# The flush and stream entries up to the pin came from the test-scope tools
+# perfbench replaced (flush seconds and ingest rec/s on local[32]), whose
+# logs no longer parse; they stay a closed chain that `check` still reads.
 WARM_SHA = "0c7f822566fe38bbcbda54b7f3fcb15891fd5a4827e6057f0bec273525eb15d6"
 FLUSH_SHA = "48264ed3ec5d58fa512314c0d849c3e4fa8e7b02af20d06bec597d1ead2c8df4"
 STREAM_SHA = "de1625e7ab519d344ac1e500ac4f8597fd057707e606b81d0122b2909d8d769f"
@@ -140,12 +142,7 @@ COMMITTED = [
            "sha256:4a287761a27bab0748b9ac52164a8a6accb23b4cf443e2e47544fd9c4d1f8661",
            WARM_SHA),
     pinned("flush", "check", FLUSH_OUT, FLUSH_SHA),
-    pinned("flush", "record",
-           "recorded r16: best 0.364 s -> {dir}/flush_history.json\n" + FLUSH_OUT, FLUSH_SHA),
     pinned("stream", "check", STREAM_OUT, STREAM_SHA),
-    pinned("stream", "record",
-           "recorded r16: median 11716 rec/s -> {dir}/stream_history.json\n" + STREAM_OUT,
-           STREAM_SHA),
     pinned("bpe", "check", BPE_OUT, BPE_SHA),
     pinned("bpe", "record",
            "recorded r16: merges/job=12.7 -> {dir}/bpe_history.json\n" + BPE_OUT, BPE_SHA),
@@ -179,40 +176,18 @@ RULES = [
          "note q3: warm 2.00s -> 1.00s (0.50x faster)\n"
          "new queries: q4\n"
          "FLAGS: 0\n"),
-    rule("flush growth", "flush", [{"label": "a", "best": 0.3}, {"label": "b", "best": 0.4}],
-         "flush: a best 0.300 s -> b best 0.400 s (ratio vs reference 0.282 s: 1.42x)\n"
-         "WARN flush best 0.300 -> 0.400 s (>1.3x round-over-round) — idle-host re-run + "
-         "adjudication or fix required\n"
-         "FLAGS: 1\n"),
-    rule("flush reference bar", "flush",
-         [{"label": "a", "best": 0.58}, {"label": "b", "best": 0.6}],
-         "flush: a best 0.580 s -> b best 0.600 s (ratio vs reference 0.282 s: 2.13x)\n"
-         "WARN flush ratio 2.13x exceeds the 2.0x match-or-beat band vs the reference's "
-         "published 0.282 s\n"
-         "FLAGS: 1\n"),
-    rule("flush read growth", "flush",
-         [{"label": "a", "best": 0.3, "read_latest": 1.0},
-          {"label": "b", "best": 0.3, "read_latest": 1.4}],
-         "flush: a best 0.300 s -> b best 0.300 s (ratio vs reference 0.282 s: 1.06x)\n"
-         "WARN flush read_latest 1.000 -> 1.400 s (>1.3x round-over-round) — idle-host "
-         "re-run + adjudication or fix required\n"
-         "FLAGS: 1\n"),
-    rule("flush read growth needs both reads", "flush",
-         [{"label": "a", "best": 0.3, "read_latest": None},
-          {"label": "b", "best": 0.3, "read_latest": 1.4}],
-         "flush: a best 0.300 s -> b best 0.300 s (ratio vs reference 0.282 s: 1.06x)\n"
-         "FLAGS: 0\n"),
-    rule("stream drop", "stream", [{"label": "a", "median": 30000, "iqr_spread": 0.1},
-                                   {"label": "b", "median": 20000, "iqr_spread": 0.1}],
+    # entries from before perfbench keep their own rules and chain
+    rule("legacy stream drop", "stream", [{"label": "a", "median": 30000, "iqr_spread": 0.1},
+                                          {"label": "b", "median": 20000, "iqr_spread": 0.1}],
          "stream: a median 30000 rec/s -> b median 20000 rec/s (IQR spread 10%)\n"
          "WARN stream median 30000 -> 20000 rec/s (>1.3x drop round-over-round) — "
          "idle-host re-run + adjudication or fix required\n"
          "FLAGS: 1\n"),
-    rule("stream spread", "stream", [{"label": "a", "median": 30000, "iqr_spread": 0.1},
-                                     {"label": "b", "median": 30000, "iqr_spread": 0.5}],
-         "stream: a median 30000 rec/s -> b median 30000 rec/s (IQR spread 50%)\n"
-         "WARN stream IQR spread 50% exceeds 35% — the median is noise; re-run idle\n"
-         "FLAGS: 1\n"),
+    rule("legacy flush read growth needs both reads", "flush",
+         [{"label": "a", "best": 0.3, "read_latest": None},
+          {"label": "b", "best": 0.3, "read_latest": 1.4}],
+         "flush: a best 0.300 s -> b best 0.300 s (ratio vs reference 0.282 s: 1.06x)\n"
+         "FLAGS: 0\n"),
     rule("bpe bar", "bpe", [{"label": "a", "merges_per_job": 10.5},
                             {"label": "b", "merges_per_job": 9.5}],
          "bpe merges/job: a=10.5 -> b=9.5\n"
@@ -273,10 +248,8 @@ RULES = [
 
 OLD_WARM = json.dumps({"value": 5.0, "warm_total": 4.0,
                        "queries": {"q1": {"cold": 1.0, "warm": 0.5}}})
-REFUSED = ("STREAMBENCH steady-state mean 9 rec/s, median 9 rec/s, IQR spread 1% "
-           "(range 1-2); keys=1 fold_check=false\n")
 # The usage lines name ratchet.py, and a missing log is a message with exit
-# 2 in every family (it was a traceback, exit 1, in flush and stream).
+# 2 in every family.
 INPUTS = [
     ("warm pre-r11 basis", "warm", [warm("a", q1=0.5)], ["record", "b", "{dir}/src"],
      {"src": OLD_WARM},
@@ -284,38 +257,167 @@ INPUTS = [
      "warm totals: a=0.5s -> b=4.0s (8.00x, 1 vs 1 queries)\n"
      "FLAGS: 0\n",
      0, "4e4448705f37e3799ae241b7d9e6e10e6b2404c707c4281197ed4d4094460fdd"),
-    ("flush best from runs", "flush", [], ["record", "a", "{dir}/src"],
-     {"src": "FLUSHBENCH upsert run1 0.500 s\nFLUSHBENCH upsert run2 0.400 s\n"},
-     "recorded a: best 0.400 s -> {dir}/flush_history.json\n"
-     "flush: a best 0.400 s -> a best 0.400 s (ratio vs reference 0.282 s: 1.42x)\n"
-     "FLAGS: 0\n",
-     0, "7b4b69783c4d8833b4da955bff2353d6d5db40b7a4a07c6cfb39fcee15ced7a0"),
-    ("stream refuses a failed fold", "stream", [{"label": "a", "median": 1, "iqr_spread": 0.0}],
-     ["record", "b", "{dir}/src"], {"src": REFUSED},
-     "REFUSED: fold self-check failed — fix the fold before recording a throughput number\n",
-     1, "66e7cf419bc5c6e3e631fa6f081e5780564ee8a86a83c114760349aa8d3b9bb3"),
     ("warm blank label", "warm", [], ["record", " "], {},
      "usage: ratchet.py warm record <label> [BENCH_FULL.json]\n", 2, EMPTY),
     ("flush no log", "flush", [], ["record", "a"], {},
-     "usage: ratchet.py flush record <label> <FlushBench log>\n", 2, EMPTY),
+     "usage: ratchet.py flush record <label> <perfbench flush_recover --trace 1 log>\n",
+     2, EMPTY),
     ("bpe missing log", "bpe", [], ["record", "a", "{dir}/missing.log"], {},
      "{dir}/missing.log not found — run BpeFallbackBench first "
      "(see CLAUDE.md close-out order)\n", 2, EMPTY),
     ("flush missing log", "flush", [], ["record", "a", "{dir}/missing.log"], {},
-     "{dir}/missing.log not found — run FlushBench first (see CLAUDE.md close-out order)\n",
-     2, EMPTY),
+     "{dir}/missing.log not found — run perfbench flush_recover --trace 1 first "
+     "(see CLAUDE.md close-out order)\n", 2, EMPTY),
     ("stream missing log", "stream", [], ["record", "a", "{dir}/missing.log"], {},
-     "{dir}/missing.log not found — run StreamBench first (see CLAUDE.md close-out order)\n",
-     2, EMPTY),
-    ("flush no lines", "flush", [], ["record", "a", "{dir}/src"], {"src": "nothing\n"},
-     "no FLUSHBENCH lines found in {dir}/src\n", 2, EMPTY),
+     "{dir}/missing.log not found — run perfbench fold_stream first "
+     "(see CLAUDE.md close-out order)\n", 2, EMPTY),
+    ("flush no lines", "flush", [], ["record", "a", "{dir}/src"], {"src": "nothing\n{}\n"},
+     "no perfbench result line with snap.upsert_ms found in {dir}/src\n", 2, EMPTY),
     ("stream no lines", "stream", [], ["record", "a", "{dir}/src"], {"src": "nothing\n"},
-     "no STREAMBENCH summary line found in {dir}/src\n", 2, EMPTY),
+     "no perfbench result line with op_p50_ms found in {dir}/src\n", 2, EMPTY),
     ("bpe no lines", "bpe", [], ["record", "a", "{dir}/src"], {"src": "nothing\n"},
      "no BPEFALLBACK line found in {dir}/src\n", 2, EMPTY),
     ("empty history", "flush", [], ["check"], {}, "no recorded entries\n", 0, EMPTY),
     ("unknown verb", "warm", None, ["show"], {}, None, 2, None),
     ("unknown family", "latency", None, ["check"], {}, None, 2, None),
+]
+
+
+def result(metrics, correct=True, failed=0):
+    """One perfbench run as close-out logs it: run.py's stderr, then its
+    JSON result line."""
+    return ("[perfbench] 15 ops; tail = p33 (5 of 15 at or below); fail_share = 0/15\n"
+            "26/10/21 19:40:30 WARN SparkConf: spark.local.dir will be overridden\n" +
+            json.dumps({"correct": correct, "attempted": 15, "failed": failed,
+                        "metrics": {k: {"value": v, "unit": "ms"}
+                                    for k, v in metrics.items()}}) + "\n")
+
+
+def flush_run(upsert_ms, read_ms=400.0, **kw):
+    """A traced flush_recover run; a layer it does not touch reads 0."""
+    return result({"snap.upsert_ms": upsert_ms, "snap.read_ms": read_ms,
+                   "state.commit_ms": 0.0}, **kw)
+
+
+def stream_run(op_p50_ms, **kw):
+    """An untraced fold_stream run."""
+    return result({"setup_s": 25.0, "work_s": 12.0, "op_p50_ms": op_p50_ms,
+                   "op_tail_ms": op_p50_ms, "peak_rss_mb": 2590.0}, **kw)
+
+
+def flushed(label, best, read=0.4, cores=CORES):
+    return {"label": label, "harness": "perfbench", "cores": cores, "best": best,
+            "read_latest": read}
+
+
+def streamed(label, p50, spread=0.1, cores=CORES):
+    return {"label": label, "harness": "perfbench", "cores": cores, "op_p50_ms": p50,
+            "iqr_spread": spread}
+
+
+def unchanged(history):
+    """The sha256 of `history` as run() writes it: a refused record keeps it."""
+    return sha(json.dumps(history, indent=1, sort_keys=True))
+
+
+def recorded(name, family, history, log, out, code=0, digest=None):
+    """ratchet.py <family> record b <log> on `history`."""
+    return (name, family, history, ["record", "b", "{dir}/src"], {"src": log}, out, code,
+            digest)
+
+
+GROWTH = "(>1.3x round-over-round) — idle-host re-run + adjudication or fix required\n"
+PERFBENCH = [
+    recorded("flush: the best upsert and read of the runs; a lone entry keeps the bars",
+             "flush", [], flush_run(310.0, 420.0) + flush_run(290.0, 405.0) + flush_run(300.0),
+             "recorded b: best 0.290 s on 4 cores -> {dir}/flush_history.json\n"
+             "flush: b best 0.290 s -> b best 0.290 s (ratio vs reference 0.282 s: 1.03x)\n"
+             "FLAGS: 0\n",
+             digest="db290a0c0940fd8956e0c8bcc4ba462085539f46abaa75201ee536aef89650cd"),
+    recorded("flush growth", "flush", [flushed("a", 0.3)], flush_run(400.0),
+             "recorded b: best 0.400 s on 4 cores -> {dir}/flush_history.json\n"
+             "flush: a best 0.300 s -> b best 0.400 s (ratio vs reference 0.282 s: 1.42x)\n"
+             "WARN flush best 0.300 -> 0.400 s " + GROWTH +
+             "FLAGS: 1\n"),
+    recorded("flush reference bar", "flush", [flushed("a", 0.58)], flush_run(600.0),
+             "recorded b: best 0.600 s on 4 cores -> {dir}/flush_history.json\n"
+             "flush: a best 0.580 s -> b best 0.600 s (ratio vs reference 0.282 s: 2.13x)\n"
+             "WARN flush ratio 2.13x exceeds the 2.0x match-or-beat band vs the reference's "
+             "published 0.282 s\n"
+             "FLAGS: 1\n"),
+    recorded("flush read growth", "flush", [flushed("a", 0.3, 1.0)], flush_run(300.0, 1400.0),
+             "recorded b: best 0.300 s on 4 cores -> {dir}/flush_history.json\n"
+             "flush: a best 0.300 s -> b best 0.300 s (ratio vs reference 0.282 s: 1.06x)\n"
+             "WARN flush read_latest 1.000 -> 1.400 s " + GROWTH +
+             "FLAGS: 1\n"),
+    # an untraced run has no snap metrics; a traced fold_stream run reads 0
+    recorded("flush reads traced flush_recover lines only", "flush", [flushed("a", 0.3)],
+             stream_run(500.0) + result({"snap.upsert_ms": 0.0, "state.commit_ms": 17.5}) +
+             flush_run(310.0),
+             "recorded b: best 0.310 s on 4 cores -> {dir}/flush_history.json\n"
+             "flush: a best 0.300 s -> b best 0.310 s (ratio vs reference 0.282 s: 1.10x)\n"
+             "FLAGS: 0\n"),
+    recorded("flush refuses a failed check", "flush", [flushed("a", 0.3)],
+             flush_run(300.0) + flush_run(300.0, correct=False),
+             "REFUSED: a perfbench run failed (correct=false, failed=0) — fix the engine "
+             "before recording a number\n",
+             1, unchanged([flushed("a", 0.3)])),
+    recorded("stream: the median op_p50 of the runs and their spread", "stream", [],
+             stream_run(310.0) + stream_run(300.0) + stream_run(330.0),
+             "recorded b: op_p50 310.0 ms on 4 cores -> {dir}/stream_history.json\n"
+             "stream: b op_p50 310.0 ms -> b op_p50 310.0 ms (IQR spread 10%)\n"
+             "FLAGS: 0\n",
+             digest="cc4925cb7d96bd742e23e23134e007acda7167eea971394b727f20ce0f701732"),
+    recorded("stream growth", "stream", [streamed("a", 300.0)], stream_run(400.0),
+             "recorded b: op_p50 400.0 ms on 4 cores -> {dir}/stream_history.json\n"
+             "stream: a op_p50 300.0 ms -> b op_p50 400.0 ms (IQR spread n/a)\n"
+             "WARN stream op_p50 300.0 -> 400.0 ms (>1.3x growth round-over-round) — "
+             "idle-host re-run + adjudication or fix required\n"
+             "FLAGS: 1\n"),
+    recorded("stream spread", "stream", [streamed("a", 300.0)],
+             stream_run(200.0) + stream_run(300.0) + stream_run(400.0),
+             "recorded b: op_p50 300.0 ms on 4 cores -> {dir}/stream_history.json\n"
+             "stream: a op_p50 300.0 ms -> b op_p50 300.0 ms (IQR spread 67%)\n"
+             "WARN stream IQR spread 67% exceeds 35% — the median is noise; re-run idle\n"
+             "FLAGS: 1\n"),
+    recorded("stream refuses a failed op", "stream", [streamed("a", 300.0)],
+             stream_run(300.0) + stream_run(300.0, failed=1),
+             "REFUSED: a perfbench run failed (correct=true, failed=1) — fix the engine "
+             "before recording a number\n",
+             1, unchanged([streamed("a", 300.0)])),
+    recorded("stream refuses a failed check", "stream", [], stream_run(300.0, correct=False),
+             "REFUSED: a perfbench run failed (correct=false, failed=0) — fix the engine "
+             "before recording a number\n",
+             1, EMPTY),
+]
+
+# an entry compares only with entries of its harness and core count
+CHAINS = [
+    recorded("flush: a 32-core entry is no basis for a 4-core run", "flush",
+             [flushed("a", 0.1, cores=32)], flush_run(300.0),
+             "recorded b: best 0.300 s on 4 cores -> {dir}/flush_history.json\n"
+             "flush: b best 0.300 s -> b best 0.300 s (ratio vs reference 0.282 s: 1.06x)\n"
+             "FLAGS: 0\n"),
+    rule("stream: a 4-core entry skips the 32-core and legacy ones between", "stream",
+         [streamed("a", 300.0), streamed("b", 100.0, cores=32),
+          {"label": "c", "median": 30000, "iqr_spread": 0.1}, streamed("d", 310.0)],
+         "stream: a op_p50 300.0 ms -> d op_p50 310.0 ms (IQR spread 10%)\n"
+         "FLAGS: 0\n"),
+    rule("flush: a legacy entry compares with the legacy one before it", "flush",
+         [{"label": "a", "best": 0.3}, flushed("b", 0.1), {"label": "c", "best": 0.35}],
+         "flush: a best 0.300 s -> c best 0.350 s (ratio vs reference 0.282 s: 1.24x)\n"
+         "FLAGS: 0\n"),
+    ("flush: the first perfbench entry after the committed history stands alone", "flush",
+     committed("flush"), ["record", "r17", "{dir}/src"], {"src": flush_run(300.0)},
+     "recorded r17: best 0.300 s on 4 cores -> {dir}/flush_history.json\n"
+     "flush: r17 best 0.300 s -> r17 best 0.300 s (ratio vs reference 0.282 s: 1.06x)\n"
+     "FLAGS: 0\n", 0, None),
+    ("stream: the first perfbench entry after the committed history stands alone",
+     "stream", committed("stream"), ["record", "r17", "{dir}/src"],
+     {"src": stream_run(300.0)},
+     "recorded r17: op_p50 300.0 ms on 4 cores -> {dir}/stream_history.json\n"
+     "stream: r17 op_p50 300.0 ms -> r17 op_p50 300.0 ms (IQR spread n/a)\n"
+     "FLAGS: 0\n", 0, None),
 ]
 
 
@@ -340,6 +442,12 @@ class RatchetTest(unittest.TestCase):
 
     def test_inputs_and_exit_codes(self):
         self.check(INPUTS)
+
+    def test_perfbench_records(self):
+        self.check(PERFBENCH)
+
+    def test_chains(self):
+        self.check(CHAINS)
 
     def test_bare_invocation_prints_usage(self):
         out = io.StringIO()
